@@ -59,7 +59,7 @@ def test_wav_chunk_walk_reads_noncanonical():
 
 
 @pytest.mark.parametrize("bad", [
-    b"", b"RIFF", b"RIFFxxxxWAVE",
+    None, b"", b"RIFF", b"RIFFxxxxWAVE",
     b"OggS" + b"\x00" * 60,
 ])
 def test_wav_decode_rejects_corruption(bad):
@@ -103,7 +103,7 @@ def test_gif_large_frame_multi_subblock():
     )
 
 
-@pytest.mark.parametrize("bad", [b"", b"GIF87a", b"PNG\x00" + b"\x00" * 50])
+@pytest.mark.parametrize("bad", [None, b"", b"GIF87a", b"PNG\x00" + b"\x00" * 50])
 def test_gif_decode_rejects_corruption(bad):
     with pytest.raises(ValueError):
         containers.decode_gif(bad)
@@ -133,7 +133,7 @@ def test_audio_features_default_wav_hook(spark):
     wav = containers.encode_wav(sq, rate)
     corrupt = wav[:30]
     df = spark.createDataFrame(
-        [("good", bytearray(wav)), ("bad", bytearray(corrupt))],
+        [("good", bytearray(wav)), ("bad", bytearray(corrupt)), ("null", None)],
         "audio_id string, bytes binary",
     )
     out = {r.audio_id: r for r in multimodal.audio_features(df).collect()}
@@ -144,8 +144,9 @@ def test_audio_features_default_wav_hook(spark):
     assert g.peak == pytest.approx(0.5, rel=1e-3)
     flips = int(np.count_nonzero(np.signbit(sq[1:]) != np.signbit(sq[:-1])))
     assert g.zero_cross_rate == pytest.approx(flips / (n - 1), rel=1e-6)
-    b = out["bad"]
-    assert not b.decode_ok and b.rms == 0.0
+    for bad in ("bad", "null"):  # corrupt and NULL payloads: verdicts, not crashes
+        b = out[bad]
+        assert not b.decode_ok and b.rms == 0.0
 
 
 def test_extract_frames_default_gif_hook(spark):
@@ -158,12 +159,12 @@ def test_extract_frames_default_gif_hook(spark):
     frames = [rng.integers(0, 256, (9, 11, 3)).astype(np.uint8) for _ in range(5)]
     gif = containers.encode_gif(frames)
     df = spark.createDataFrame(
-        [("v1", bytearray(gif)), ("v2", bytearray(gif[:25]))],
+        [("v1", bytearray(gif)), ("v2", bytearray(gif[:25])), ("v3", None)],
         "video_id string, bytes binary",
     )
     out = multimodal.extract_frames(df, every_n=2).collect()
     got = sorted((r.video_id, r.frame_idx) for r in out)
-    assert got == [("v1", 0), ("v1", 2), ("v1", 4)]  # corrupt v2 dropped
+    assert got == [("v1", 0), ("v1", 2), ("v1", 4)]  # corrupt v2, NULL v3 dropped
     by = {r.frame_idx: bytes(r.bytes) for r in out}
     for idx in (0, 2, 4):
         pixels, fmt = codec.decode_image(by[idx])

@@ -1,6 +1,8 @@
 """validate_one_pass: one scan + one shuffle must reproduce validate()'s
 per-partition verdict semantics exactly (row + decode/phash rules)."""
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,16 +23,26 @@ def dirty(spark):
     return df
 
 
-def _row_decode_rules() -> RuleSet:
+def _row_decode_rules(**phash_params) -> RuleSet:
     # the default suite minus set-level and drift rules (those need their
     # own shuffles and are out of one-pass scope by design)
     keep = {"not_null", "pattern", "enumeration", "min", "max", "max_length",
             "length", "assertion_sql", "decode_image", "phash_consistency"}
-    return RuleSet([r for r in default_image_ruleset() if r.kind in keep])
+    return RuleSet([
+        replace(r, params={**r.params, **phash_params})
+        if r.kind == "phash_consistency" else r
+        for r in default_image_ruleset() if r.kind in keep
+    ])
 
 
 def test_one_pass_matches_classic_verdicts(spark, dirty):
-    rs = _row_decode_rules()
+    # max_hamming_lossy=0: the lossy jpeg/webp rows, whose stored phash
+    # comes from the original pixels, fail phash only if the limit is used
+    for phash_params in ({}, {"max_hamming_lossy": 0}):
+        _assert_one_pass_matches_classic(_row_decode_rules(**phash_params), dirty)
+
+
+def _assert_one_pass_matches_classic(rs, dirty):
     eng = ValidationEngine(rs)
 
     classic = eng.validate(dirty, run_id="c", with_stats=False)

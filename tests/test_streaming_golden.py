@@ -107,7 +107,11 @@ def test_windowed_verdicts_golden_rows(spark, tmp_path):
     _write_batches(spark, src)
 
     eng = ValidationEngine(
-        RuleSet([Rule("v_max", "max", "value", {"value": 12})]),
+        RuleSet([
+            Rule("v_max", "max", "value", {"value": 12}),
+            # a warning that fires on most rows must not count toward FAIL
+            Rule("v_warn", "max", "value", {"value": 5}, severity="warning"),
+        ]),
         id_col="id",
         partition_col="pt",
     )

@@ -190,6 +190,7 @@ class CheckpointedRun:
         for bi, batch in enumerate(batches):
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"injected failure before batch {bi}")
+            t0 = time.time()  # wall_sec covers the driver's plan build too
             sub = df.filter(F.col(part_col).isin(batch))
             # per-batch pass runs row + partition-scoped rules only; the
             # table-scoped set rules run in finish() over the whole input.
@@ -198,7 +199,6 @@ class CheckpointedRun:
             )
             eng = ValidationEngine(batch_rules, self.engine.id_col, part_col)
             result = eng.validate(sub, run_id=self.run_id, secondary=secondary, with_stats=False)
-            t0 = time.time()
             # batch metrics ride the sink actions themselves via observe()
             # (Spark's Observation API): the aggregates are computed DURING
             # the writes — zero extra jobs, zero extra scans — and land on

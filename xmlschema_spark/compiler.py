@@ -385,9 +385,3 @@ def violation_reason(rule: Rule) -> str:
         base += f" [where {rule.gate}]"
     return base
 
-
-def compile_ruleset_projection(rules: list[Rule]) -> dict[str, Column]:
-    """All row rules → {rule_id: ok_column}. One wide projection, fused by
-    whole-stage codegen (the Catalyst counterpart of the reference's
-    parse-time validator specialization, facets.py:150-159)."""
-    return {r.rule_id: compile_row_rule(r) for r in rules}

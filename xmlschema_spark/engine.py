@@ -1,17 +1,26 @@
-"""ValidationEngine — scan → wide rule pass → violations + verdicts.
+"""ValidationEngine — one compiled check list → violations + verdicts.
 
-Lifecycle (the Spark re-expression of ``schema.validate()``,
-/root/reference/xmlschema/validators/schema.py:946-1020, per SURVEY.md §3.2):
+Lifecycle (the Spark re-expression of ``schema.validate()``, reference
+validators/schema.py:946-1020, per SURVEY.md §3.2, whose ``iter_errors``
+walks a document once for every constraint kind):
 
-1. driver compiles the rule set (once — the analog of XsdGlobals.build),
-2. ONE wide projection evaluates every row-level rule as a boolean column
-   fused by whole-stage codegen; failing rules fold into an array of
-   violation structs per row; explode → violation rows,
+1. the constructor compiles the rule set once (the analog of
+   XsdGlobals.build) into ONE check list: for each row rule, and for the
+   decode and phash rules, a ``bad`` predicate, the violation reason and
+   the column whose value a violation reports. Row checks read the input
+   row; decode and phash checks read the output of the one
+   ``decode_check`` pandas-UDF wiring;
+2. every consumer reads that list:
+   - violation detail rows: one explode over the failing checks of each
+     input row (row rules) or decoded row (decode / phash rules);
+   - :meth:`ValidationEngine.validate_one_pass`: per-check 0/1 sums in one
+     aggregation;
+   - the streaming verdicts: the per-row error total;
 3. set-level rules (unique/key/keyref) run as hash aggregations /
-   left-anti joins,
-4. dataset-level rules (decode_image, phash_consistency, drift) run as
-   pandas-UDF passes over pruned column sets,
-5. verdict assembly: per-partition PASS/FAIL + counts + metrics.
+   left-anti joins and drift rules as per-partition scores; their rows go
+   through the same violation-row builder;
+4. verdicts: per-partition PASS/FAIL + counts + the PSVI validity, from one
+   builder for ``validate`` and ``validate_one_pass`` alike.
 
 Validation modes mirror XSD_VALIDATION_MODES (xsdbase.py:24,674-705):
 ``strict`` fail-fast (first violation only), ``lax`` collect everything,
@@ -24,9 +33,10 @@ triple collapsed to PASS/FAIL per partition (xsdbase.py:62-92).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,7 +48,7 @@ from xmlschema_spark.operators import stats as stats_ops
 from xmlschema_spark.operators import text as _text_ops  # noqa: F401 —
 # imported for its side effect: registers the lang_expected rule kind
 # (the same pattern multimodal uses for header_consistent)
-from xmlschema_spark.rules import RuleSet
+from xmlschema_spark.rules import Rule, RuleSet
 
 VIOLATION_SCHEMA = T.StructType(
     [
@@ -54,6 +64,122 @@ VIOLATION_SCHEMA = T.StructType(
 )
 
 
+class _Check(NamedTuple):
+    """One compiled check: a violation wherever ``bad`` holds."""
+
+    rule: Rule
+    bad: Column
+    column: str  # the violation row's ``column`` label
+    value: str | None  # the column whose value the violation row reports
+    # a Column-building reason is built only when detail rows are: the
+    # one-pass plan never reads it
+    reason: str | Callable[[], Column]
+
+
+def _decode_reason() -> Column:
+    return F.concat_ws(
+        "; ",
+        F.when(~F.col("decode_ok"), F.concat(F.lit("decode failed: "), F.coalesce("error", F.lit("")))),
+        F.when(F.col("decode_ok") & ~F.col("fmt_match"), F.lit("container fmt != declared fmt")),
+        F.when(F.col("decode_ok") & ~F.col("dims_match"), F.lit("decoded dims != declared (w,h)")),
+        F.when(F.col("decode_ok") & ~F.col("psnr_ok"), F.concat(F.lit("psnr below threshold: "), F.round("psnr", 2).cast("string"))),
+    )
+
+
+def _error_total(checks: list[_Check], count: Callable[[_Check], Column]) -> Column:
+    """``count(check)`` summed over the error-severity checks: the one
+    FAIL count every verdict reads (warnings never fail a partition)."""
+    errors = [count(c) for c in checks if c.rule.severity == "error"]
+    return sum(errors) if errors else F.lit(0)
+
+
+def _field(v) -> Column:
+    """A violation field: a Column as is, None as a NULL string, any
+    other Python value as a literal."""
+    if isinstance(v, Column):
+        return v
+    return F.lit(None).cast("string") if v is None else F.lit(v)
+
+
+def _violation_rows(df: DataFrame, **fields) -> DataFrame:
+    """Project ``df`` onto VIOLATION_SCHEMA: the one place its eight fields
+    are assembled, each given as a Column or a Python value."""
+    return df.select(*[_field(fields[f.name]).alias(f.name) for f in VIOLATION_SCHEMA.fields])
+
+
+def _exploded(
+    df: DataFrame, run_id: str, checks: list[_Check], row_id: Column, partition_id: Column
+) -> DataFrame:
+    """One violation row per (row of ``df``, check whose ``bad`` holds)."""
+    structs = [
+        F.when(
+            c.bad,
+            F.struct(
+                F.lit(c.rule.rule_id).alias("rule_id"),
+                F.lit(c.column).alias("column"),
+                _field(F.col(c.value).cast("string") if c.value else None).alias("value"),
+                _field(c.reason if isinstance(c.reason, str) else c.reason()).alias("reason"),
+                F.lit(c.rule.severity).alias("severity"),
+            ),
+        )
+        for c in checks
+    ]
+    # Plan-shape rules learned the hard way (each measured ~2-6x wall
+    # on a computed-column rule suite like the interval parse):
+    # - no filter(size(__v) > 0) before the explode: explode (not
+    #   explode_outer) already emits zero rows for an empty array, and
+    #   a size() pre-filter collapses into the projection, DUPLICATING
+    #   the entire rule-struct array expression per row;
+    # - the explode lives in the SAME select that builds the array: a
+    #   separate project of __v followed by explode("__v") keeps the
+    #   Generate's child materializing the full struct array alongside
+    #   the generator (measured 6x slower than the inline form).
+    exploded = df.select(
+        row_id.alias("row_id"),
+        partition_id.alias("partition_id"),
+        F.explode(F.array_compact(F.array(*structs))).alias("v"),
+    )
+    return _violation_rows(
+        exploded, run_id=run_id, partition_id=F.col("partition_id"), row_id=F.col("row_id"),
+        **{k: F.col(f"v.{k}") for k in ("rule_id", "column", "value", "reason", "severity")},
+    )
+
+
+def _verdict_rows(
+    df: DataFrame, run_id: str, n_viol: Column, n_rows: Column, metrics: Column,
+    attempted: str, *extra: Column,
+) -> DataFrame:
+    """The one verdict projection over per-partition counts: PASS/FAIL and
+    the PSVI ``validation_attempted`` / ``validity`` (xsdbase.py:62-92).
+
+    skip mode is attempted='none' → validity='notKnown' (NOT a clean
+    PASS), strict mode that stopped at the first hit is 'partial', and an
+    empty scope with nothing checked is 'notKnown' rather than 'valid'."""
+    if attempted == "none":
+        validity = F.lit("notKnown")
+    elif attempted == "partial":
+        # strict stopped at the first hit: partitions with no recorded
+        # violation were not fully assessed — notKnown, not valid
+        validity = F.when(n_viol > 0, F.lit("invalid")).otherwise(F.lit("notKnown"))
+    else:
+        validity = (
+            F.when(n_viol > 0, F.lit("invalid"))
+            .when(n_rows == 0, F.lit("notKnown"))
+            .otherwise(F.lit("valid"))
+        )
+    return df.select(
+        F.lit(run_id).alias("run_id"),
+        "partition_id",
+        F.when(n_viol > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status"),
+        n_rows.alias("rows_checked"),
+        n_viol.cast("long").alias("violation_count"),
+        metrics.alias("metrics"),
+        F.lit(attempted).alias("validation_attempted"),
+        validity.alias("validity"),
+        *extra,
+    )
+
+
 @dataclass
 class ValidationResult:
     run_id: str
@@ -61,17 +187,11 @@ class ValidationResult:
     verdicts: DataFrame
     stats: DataFrame | None = None
     mode: str = "lax"
-    extras: dict = field(default_factory=dict)
 
     def unpersist(self) -> None:
-        """Release every DataFrame this run persisted (violations plus
-        intermediates like the decode-check table). Without this, a later
+        """Release the persisted violations. Without this, a later
         identical run would silently serve Spark's plan-matching cache."""
-        for df in [self.violations, *self.extras.get("persisted", [])]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        self.violations.unpersist()
 
 
 class ValidationEngine:
@@ -92,53 +212,46 @@ class ValidationEngine:
         self.ruleset = ruleset
         self.id_col = id_col
         self.partition_col = partition_col
-        # compile row rules once, driver-side
-        self._row_rules = ruleset.row_rules
-        self._row_preds = [(r, compile_row_rule(r), violation_reason(r)) for r in self._row_rules]
+        # the compiled check list: the row checks, then the checks that
+        # read decode_check's output (only the first decode and the first
+        # phash rule count)
+        self._checks = [
+            _Check(r, ~compile_row_rule(r), r.column or "", r.column, violation_reason(r))
+            for r in ruleset.row_rules
+        ]
+        self._n_row = len(self._checks)
+        dec, ph = (
+            next((r for r in ruleset.dataset_rules if r.kind == k), None)
+            for k in ("decode_image", "phash_consistency")
+        )
+        self._decode_args = None
+        if dec or ph:
+            self._decode_args = dict(
+                psnr_db=float((dec or ph).param("psnr_db", 40.0)),
+                check_phash=ph is not None,
+                phash_max_hamming_lossy=int(ph.param("max_hamming_lossy", 20)) if ph else 20,
+            )
+        if dec:
+            bad = ~(F.col("decode_ok") & F.col("dims_match") & F.col("fmt_match") & F.col("psnr_ok"))
+            self._checks.append(_Check(dec, bad, "bytes", None, _decode_reason))
+        if ph:
+            bad = F.col("decode_ok") & ~F.col("phash_match")
+            self._checks.append(_Check(ph, bad, "phash", None, "stored phash != phash of decoded pixels"))
+
+    def _row_errors(self) -> Column:
+        """Per input row: how many error-severity row checks fail."""
+        return _error_total(self._checks[: self._n_row], lambda c: c.bad.cast("long"))
 
     # ------------------------------------------------------------------ row
 
     def row_violations(self, df: DataFrame, run_id: str) -> DataFrame:
         """One scan; every rule a boolean; failures exploded to rows."""
-        if not self._row_preds:
+        if not self._n_row:
             return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
-        structs = [
-            F.when(
-                ~ok,
-                F.struct(
-                    F.lit(r.rule_id).alias("rule_id"),
-                    F.lit(r.column or "").alias("column"),
-                    (F.col(r.column).cast("string") if r.column else F.lit(None).cast("string")).alias("value"),
-                    F.lit(reason).alias("reason"),
-                    F.lit(r.severity).alias("severity"),
-                ),
-            )
-            for r, ok, reason in self._row_preds
-        ]
-        # Plan-shape rules learned the hard way (each measured ~2-6x wall
-        # on a computed-column rule suite like the interval parse):
-        # - no filter(size(__v) > 0) before the explode: explode (not
-        #   explode_outer) already emits zero rows for an empty array, and
-        #   a size() pre-filter collapses into the projection, DUPLICATING
-        #   the entire rule-struct array expression per row;
-        # - the explode lives in the SAME select that builds the array: a
-        #   separate project of __v followed by explode("__v") keeps the
-        #   Generate's child materializing the full struct array alongside
-        #   the generator (measured 6x slower than the inline form).
-        exploded = df.select(
-            F.col(self.id_col).cast("string").alias("row_id"),
-            F.col(self.partition_col).cast("string").alias("partition_id"),
-            F.explode(F.array_compact(F.array(*structs))).alias("v"),
-        )
-        return exploded.select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            F.col("v.rule_id").alias("rule_id"),
-            "row_id",
-            F.col("v.column").alias("column"),
-            F.col("v.value").alias("value"),
-            F.col("v.reason").alias("reason"),
-            F.col("v.severity").alias("severity"),
+        return _exploded(
+            df, run_id, self._checks[: self._n_row],
+            row_id=F.col(self.id_col).cast("string"),
+            partition_id=F.col(self.partition_col).cast("string"),
         )
 
     # ------------------------------------------------------------------ set
@@ -152,42 +265,30 @@ class ValidationEngine:
         secondary = secondary or {}
         for r in self.ruleset.set_rules:
             cols = list(r.param("columns", []))
+            values = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
             scope = self.partition_col if r.scope == "partition" else None
             if r.kind in ("unique", "key"):
                 dups = id_ops.duplicate_values(
                     df, cols, scope_col=scope,
                     salt_partitions=int(r.param("salt_partitions", 0)),
                 )
-                part = F.col(scope).cast("string") if scope else F.lit("__table__")
-                out.append(
-                    dups.select(
-                        F.lit(run_id).alias("run_id"),
-                        part.alias("partition_id"),
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.concat_ws("|", *[F.col(c).cast("string") for c in cols]).alias("row_id"),
-                        F.lit(",".join(cols)).alias("column"),
-                        F.concat_ws("|", *[F.col(c).cast("string") for c in cols]).alias("value"),
-                        F.concat(
-                            F.lit(f"duplicated value for {r.kind} constraint ({r.rule_id}): x"),
-                            F.col("dup_count").cast("string"),
-                        ).alias("reason"),
-                        F.lit(r.severity).alias("severity"),
-                    )
-                )
+                out.append(_violation_rows(
+                    dups, run_id=run_id, rule_id=r.rule_id, severity=r.severity,
+                    partition_id=F.col(scope).cast("string") if scope else "__table__",
+                    row_id=values, column=",".join(cols), value=values,
+                    reason=F.concat(
+                        F.lit(f"duplicated value for {r.kind} constraint ({r.rule_id}): x"),
+                        F.col("dup_count").cast("string"),
+                    ),
+                ))
                 if r.kind == "key":
-                    nulls = id_ops.key_null_rows(df, cols, self.id_col)
-                    out.append(
-                        nulls.select(
-                            F.lit(run_id).alias("run_id"),
-                            F.lit("__table__").alias("partition_id"),
-                            F.lit(r.rule_id).alias("rule_id"),
-                            F.col("row_id").cast("string").alias("row_id"),
-                            F.concat_ws(",", "null_columns").alias("column"),
-                            F.lit(None).cast("string").alias("value"),
-                            F.lit("missing key field (key fields are required)").alias("reason"),
-                            F.lit(r.severity).alias("severity"),
-                        )
-                    )
+                    out.append(_violation_rows(
+                        id_ops.key_null_rows(df, cols, self.id_col),
+                        run_id=run_id, rule_id=r.rule_id, severity=r.severity,
+                        partition_id="__table__", row_id=F.col("row_id").cast("string"),
+                        column=F.concat_ws(",", "null_columns"), value=None,
+                        reason="missing key field (key fields are required)",
+                    ))
             elif r.kind in ("keyref", "idref"):
                 if r.kind == "idref":
                     # IDREF → xs:ID pairing sugar (builtins.py:328-341):
@@ -206,85 +307,29 @@ class ValidationEngine:
                     df, cols, pk_df, list(r.param("refer_columns", cols)),
                     broadcast_pk=r.param("broadcast_pk"),
                 )
-                out.append(
-                    orphans.select(
-                        F.lit(run_id).alias("run_id"),
-                        F.col(self.partition_col).cast("string").alias("partition_id"),
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.col(self.id_col).cast("string").alias("row_id"),
-                        F.lit(",".join(cols)).alias("column"),
-                        F.concat_ws("|", *[F.col(c).cast("string") for c in cols]).alias("value"),
-                        F.lit(f"key not found in {ref_name} (keyref {r.rule_id})").alias("reason"),
-                        F.lit(r.severity).alias("severity"),
-                    )
-                )
+                out.append(_violation_rows(
+                    orphans, run_id=run_id, rule_id=r.rule_id, severity=r.severity,
+                    partition_id=F.col(self.partition_col).cast("string"),
+                    row_id=F.col(self.id_col).cast("string"), column=",".join(cols), value=values,
+                    reason=f"key not found in {ref_name} (keyref {r.rule_id})",
+                ))
         return out
 
     # -------------------------------------------------------------- dataset
 
-    def dataset_violations(
-        self, df: DataFrame, run_id: str, persisted: list | None = None
-    ) -> list[DataFrame]:
+    def dataset_violations(self, df: DataFrame, run_id: str) -> list[DataFrame]:
         out: list[DataFrame] = []
-        persisted = persisted if persisted is not None else []
-        decode_rules = [r for r in self.ruleset.dataset_rules if r.kind == "decode_image"]
-        phash_rules = [r for r in self.ruleset.dataset_rules if r.kind == "phash_consistency"]
-        if decode_rules or phash_rules:
-            psnr_db = float((decode_rules or phash_rules)[0].param("psnr_db", 40.0))
-            checks = mm_ops.decode_check(
-                df,
-                psnr_db=psnr_db,
-                id_col=self.id_col,
-                check_phash=bool(phash_rules),
-                phash_max_hamming_lossy=(
-                    int(phash_rules[0].param("max_hamming_lossy", 20)) if phash_rules else 20
-                ),
-                # the partition column rides through the UDF — joining it
-                # back by id afterwards would cost a broadcast + join
-                passthrough=[self.partition_col],
-            ).withColumn("partition_id", F.col(self.partition_col).cast("string"))
-            # decode + phash rules both filter this DF — persist so the
-            # Arrow decode pass over the binary column runs exactly once.
-            checks = checks.persist()
-            persisted.append(checks)
-            if decode_rules:
-                r = decode_rules[0]
-                bad = checks.filter(
-                    ~F.col("decode_ok") | ~F.col("dims_match") | ~F.col("fmt_match") | ~F.col("psnr_ok")
-                )
-                out.append(
-                    bad.select(
-                        F.lit(run_id).alias("run_id"),
-                        F.coalesce("partition_id", F.lit("__table__")).alias("partition_id"),
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.col("image_id").alias("row_id"),
-                        F.lit("bytes").alias("column"),
-                        F.lit(None).cast("string").alias("value"),
-                        F.concat_ws(
-                            "; ",
-                            F.when(~F.col("decode_ok"), F.concat(F.lit("decode failed: "), F.coalesce("error", F.lit("")))),
-                            F.when(F.col("decode_ok") & ~F.col("fmt_match"), F.lit("container fmt != declared fmt")),
-                            F.when(F.col("decode_ok") & ~F.col("dims_match"), F.lit("decoded dims != declared (w,h)")),
-                            F.when(F.col("decode_ok") & ~F.col("psnr_ok"), F.concat(F.lit("psnr below threshold: "), F.round("psnr", 2).cast("string"))),
-                        ).alias("reason"),
-                        F.lit(r.severity).alias("severity"),
-                    )
-                )
-            if phash_rules:
-                r = phash_rules[0]
-                bad = checks.filter(F.col("decode_ok") & ~F.col("phash_match"))
-                out.append(
-                    bad.select(
-                        F.lit(run_id).alias("run_id"),
-                        F.coalesce("partition_id", F.lit("__table__")).alias("partition_id"),
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.col("image_id").alias("row_id"),
-                        F.lit("phash").alias("column"),
-                        F.lit(None).cast("string").alias("value"),
-                        F.lit("stored phash != phash of decoded pixels").alias("reason"),
-                        F.lit(r.severity).alias("severity"),
-                    )
-                )
+        if self._decode_args is not None:
+            # the partition column rides through the UDF — joining it back
+            # by id afterwards would cost a broadcast + join
+            decoded = mm_ops.decode_check(
+                df, id_col=self.id_col, passthrough=[self.partition_col], **self._decode_args
+            )
+            out.append(_exploded(
+                decoded, run_id, self._checks[self._n_row:],
+                row_id=F.col("image_id"),
+                partition_id=F.coalesce(F.col(self.partition_col).cast("string"), F.lit("__table__")),
+            ))
         for r in self.ruleset.dataset_rules:
             if r.kind in ("drift_ks", "drift_psi"):
                 col = r.param("column") or r.column
@@ -295,19 +340,13 @@ class ValidationEngine:
                 else:
                     scores = drift_ops.ks(df, col, self.partition_col)
                     stat_col = "ks"
-                bad = scores.filter(F.col(stat_col) > threshold)
-                out.append(
-                    bad.select(
-                        F.lit(run_id).alias("run_id"),
-                        F.col(self.partition_col).cast("string").alias("partition_id"),
-                        F.lit(r.rule_id).alias("rule_id"),
-                        F.lit(None).cast("string").alias("row_id"),
-                        F.lit(col).alias("column"),
-                        F.round(F.col(stat_col), 6).cast("string").alias("value"),
-                        F.lit(f"{stat_col} drift above {threshold} vs reference").alias("reason"),
-                        F.lit(r.severity).alias("severity"),
-                    )
-                )
+                out.append(_violation_rows(
+                    scores.filter(F.col(stat_col) > threshold),
+                    run_id=run_id, rule_id=r.rule_id, severity=r.severity,
+                    partition_id=F.col(self.partition_col).cast("string"), row_id=None,
+                    column=col, value=F.round(F.col(stat_col), 6).cast("string"),
+                    reason=f"{stat_col} drift above {threshold} vs reference",
+                ))
         return out
 
     # ----------------------------------------------------------------- main
@@ -337,7 +376,6 @@ class ValidationEngine:
             verdicts = self._verdicts(df, empty, run_id, attempted="none")
             return ValidationResult(run_id, empty, verdicts, stats_df, mode)
 
-        persisted: list = []
         if mode == "strict":
             # fail-fast, like validation='strict' raising at the first
             # yield (xsdbase.py:698-701): branches are evaluated in cost
@@ -349,7 +387,7 @@ class ValidationEngine:
             branch_makers = [
                 lambda: [self.row_violations(df, run_id)],
                 lambda: self.set_violations(df, run_id, secondary),
-                lambda: self.dataset_violations(df, run_id, persisted=persisted),
+                lambda: self.dataset_violations(df, run_id),
             ]
             violations = spark.createDataFrame([], VIOLATION_SCHEMA)
             for make in branch_makers:
@@ -376,14 +414,11 @@ class ValidationEngine:
                 df, violations, run_id,
                 attempted="partial" if hit_found else "full",
             )
-            return ValidationResult(
-                run_id, violations, verdicts, stats_df, mode,
-                extras={"persisted": persisted},
-            )
+            return ValidationResult(run_id, violations, verdicts, stats_df, mode)
 
         parts = [self.row_violations(df, run_id)]
         parts += self.set_violations(df, run_id, secondary)
-        parts += self.dataset_violations(df, run_id, persisted=persisted)
+        parts += self.dataset_violations(df, run_id)
         violations = parts[0]
         for p in parts[1:]:
             violations = violations.unionByName(p)
@@ -394,10 +429,7 @@ class ValidationEngine:
         # holds at 10^12-row scale where recomputing the scan would not.
         violations = violations.persist()
         verdicts = self._verdicts(df, violations, run_id)
-        return ValidationResult(
-            run_id, violations, verdicts, stats_df, mode,
-            extras={"persisted": persisted},
-        )
+        return ValidationResult(run_id, violations, verdicts, stats_df, mode)
 
     # ------------------------------------------------------------- one-pass
 
@@ -418,7 +450,7 @@ class ValidationEngine:
 
         1. if decode/phash rules exist, the Arrow decode UDF runs INSIDE
            the scan, passing every rule column through,
-        2. every row rule and decode invariant becomes a 0/1 column,
+        2. every check of the compiled list becomes a 0/1 column,
         3. one ``groupBy(partition)`` with map-side partial aggregation
            emits rows_checked + per-rule counts + column stats.
 
@@ -433,13 +465,15 @@ class ValidationEngine:
         streaming HashAggregate to a full-sort SortAggregate. Exact string
         min/max lives in :func:`operators.stats.profile`.
         """
-        decode_rules = [r for r in self.ruleset.dataset_rules if r.kind == "decode_image"]
-        phash_rules = [r for r in self.ruleset.dataset_rules if r.kind == "phash_consistency"]
-
+        stats_src = (
+            stats_columns or [
+                f.name for f in df.schema.fields
+                if f.name not in (self.partition_col, "bytes")
+            ]
+        ) if with_stats else []
         src = df
-        check_exprs: list = []
         decode_str_stats: dict[str, tuple[str, str, str]] = {}
-        if decode_rules or phash_rules:
+        if self._decode_args is not None:
             # Evaluate every ROW-rule predicate JVM-side BEFORE the Arrow
             # UDF (fused into the scan by codegen) and carry only the 0/1
             # flags through — so the multi-KB ``bytes`` payload crosses
@@ -452,17 +486,11 @@ class ValidationEngine:
             # prefix ordinal (min/max), xxhash64 (HLL hashes its input
             # anyway, so approx_count_distinct over the hash estimates the
             # same cardinality).
-            flag_cols = [f"__v{i}" for i in range(len(self._row_preds))]
+            flag_cols = [f"__v{i}" for i in range(self._n_row)]
             flag_exprs = [
-                (~ok).cast("int").alias(fc)
-                for fc, (_, ok, _reason) in zip(flag_cols, self._row_preds)
+                c.bad.cast("int").alias(fc)
+                for fc, c in zip(flag_cols, self._checks[: self._n_row])
             ]
-            stats_src = (
-                stats_columns or [
-                    f.name for f in df.schema.fields
-                    if f.name not in (self.partition_col, "bytes")
-                ]
-            ) if with_stats else []
             derived_exprs: list = []
             for i, c in enumerate(
                 c for c in stats_src
@@ -482,92 +510,58 @@ class ValidationEngine:
                 if c != self.id_col and c not in decode_str_stats
             ] + [n for names in decode_str_stats.values() for n in names]
             src = mm_ops.decode_check(
-                pre,
-                psnr_db=float((decode_rules or phash_rules)[0].param("psnr_db", 40.0)),
-                id_col=self.id_col,
-                check_phash=bool(phash_rules),
-                passthrough=passthrough,
+                pre, id_col=self.id_col, passthrough=passthrough, **self._decode_args
             )
             if self.id_col != "image_id":
                 src = src.withColumnRenamed("image_id", self.id_col)
-            if decode_rules:
-                bad = ~(
-                    F.col("decode_ok") & F.col("dims_match")
-                    & F.col("fmt_match") & F.col("psnr_ok")
-                )
-                check_exprs.append((decode_rules[0], bad))
-            if phash_rules:
-                check_exprs.append(
-                    (phash_rules[0], F.col("decode_ok") & ~F.col("phash_match"))
-                )
-            flags = [
-                F.sum(F.col(fc).cast("long")).alias(r.rule_id)
-                for fc, (r, _ok, _reason) in zip(flag_cols, self._row_preds)
-            ]
+            counts = [F.col(fc).cast("long") for fc in flag_cols]
+            counts += [c.bad.cast("long") for c in self._checks[self._n_row:]]
         else:
-            flags = [
-                F.sum((~ok).cast("long")).alias(r.rule_id)
-                for r, ok, _ in self._row_preds
-            ]
-        flags += [F.sum(bad.cast("long")).alias(r.rule_id) for r, bad in check_exprs]
-        error_rules = [
-            r.rule_id
-            for r in (
-                [p[0] for p in self._row_preds] + [c[0] for c in check_exprs]
-            )
-            if r.severity == "error"
-        ]
+            counts = [c.bad.cast("long") for c in self._checks]
+        flags = [F.sum(n).alias(c.rule.rule_id) for n, c in zip(counts, self._checks)]
 
         stat_aggs: list = []
         str_ord_cols: list[str] = []
-        if with_stats:
-            cols = stats_columns or [
-                f.name for f in df.schema.fields
-                if f.name not in (self.partition_col, "bytes")
-            ]
-            for c in cols:
-                if c in decode_str_stats:
-                    # stats inputs were materialized JVM-side before the
-                    # Arrow UDF (fixed-width passthrough — see above)
-                    n_null, n_ord, n_hash = decode_str_stats[c]
-                    str_ord_cols.append(c)
-                    stat_aggs += [
-                        F.sum(F.col(n_null).cast("long")).alias(f"{c}__nulls"),
-                        F.min(F.col(n_ord)).alias(f"{c}__min"),
-                        F.max(F.col(n_ord)).alias(f"{c}__max"),
-                        F.approx_count_distinct(n_hash, distinct_rsd).alias(f"{c}__distinct"),
-                    ]
-                elif isinstance(df.schema[c].dataType, T.StringType):
-                    # min/max over a STRING buffer would force the WHOLE
-                    # one-pass aggregation into SortAggregate (a full sort
-                    # of the decode output — ruinous at 10^12 rows); the
-                    # order-preserving prefix ordinal keeps it a streaming
-                    # HashAggregate. Exact full-string min/max lives in
-                    # stats.profile (its own agg, DuckDB-oracle-checked).
-                    str_ord_cols.append(c)
-                    ordinal = stats_ops._string_prefix_ordinal(F.col(c))
-                    stat_aggs += [
-                        F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-                        F.min(ordinal).alias(f"{c}__min"),
-                        F.max(ordinal).alias(f"{c}__max"),
-                        F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
-                    ]
-                else:
-                    stat_aggs += [
-                        F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-                        F.min(F.col(c)).cast("string").alias(f"{c}__min"),
-                        F.max(F.col(c)).cast("string").alias(f"{c}__max"),
-                        F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
-                    ]
+        for c in stats_src:
+            if c in decode_str_stats:
+                # stats inputs were materialized JVM-side before the
+                # Arrow UDF (fixed-width passthrough — see above)
+                n_null, n_ord, n_hash = decode_str_stats[c]
+                str_ord_cols.append(c)
+                stat_aggs += [
+                    F.sum(F.col(n_null).cast("long")).alias(f"{c}__nulls"),
+                    F.min(F.col(n_ord)).alias(f"{c}__min"),
+                    F.max(F.col(n_ord)).alias(f"{c}__max"),
+                    F.approx_count_distinct(n_hash, distinct_rsd).alias(f"{c}__distinct"),
+                ]
+            elif isinstance(df.schema[c].dataType, T.StringType):
+                # min/max over a STRING buffer would force the WHOLE
+                # one-pass aggregation into SortAggregate (a full sort
+                # of the decode output — ruinous at 10^12 rows); the
+                # order-preserving prefix ordinal keeps it a streaming
+                # HashAggregate. Exact full-string min/max lives in
+                # stats.profile (its own agg, DuckDB-oracle-checked).
+                str_ord_cols.append(c)
+                ordinal = stats_ops._string_prefix_ordinal(F.col(c))
+                stat_aggs += [
+                    F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
+                    F.min(ordinal).alias(f"{c}__min"),
+                    F.max(ordinal).alias(f"{c}__max"),
+                    F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
+                ]
+            else:
+                stat_aggs += [
+                    F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
+                    F.min(F.col(c)).cast("string").alias(f"{c}__min"),
+                    F.max(F.col(c)).cast("string").alias(f"{c}__max"),
+                    F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
+                ]
 
         wide = src.groupBy(
             F.col(self.partition_col).cast("string").alias("partition_id")
         ).agg(F.count(F.lit(1)).alias("rows_checked"), *flags, *stat_aggs)
 
-        rule_ids = [p[0].rule_id for p in self._row_preds] + [c[0].rule_id for c in check_exprs]
-        total_errors = (
-            sum(F.col(r) for r in error_rules) if error_rules else F.lit(0)
-        )
+        rule_ids = [c.rule.rule_id for c in self._checks]
         metrics = F.map_from_arrays(
             F.array(*[F.lit(r) for r in rule_ids]),
             F.array(*[F.col(r).cast("string") for r in rule_ids]),
@@ -580,18 +574,10 @@ class ValidationEngine:
                 return stats_ops._string_prefix_decode(F.col(a)).alias(a)
             return F.col(a)
 
-        return wide.select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            F.when(total_errors > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status"),
-            "rows_checked",
-            total_errors.cast("long").alias("violation_count"),
-            metrics.alias("metrics"),
-            F.lit("full").alias("validation_attempted"),
-            F.when(total_errors > 0, F.lit("invalid"))
-            .when(F.col("rows_checked") == 0, F.lit("notKnown"))
-            .otherwise(F.lit("valid"))
-            .alias("validity"),
+        return _verdict_rows(
+            wide, run_id,
+            _error_total(self._checks, lambda c: F.col(c.rule.rule_id)),
+            F.col("rows_checked"), metrics, "full",
             *[_stat_out(a) for a in
               [f.name for f in wide.schema.fields if "__" in f.name]],
         )
@@ -604,13 +590,9 @@ class ValidationEngine:
         Table-scoped violations (partition_id='__table__') fail every
         partition's verdict? No — they get their own '__table__' verdict
         row, mirroring how the reference attaches errors to the scope that
-        declared the constraint (elements.py:546-551).
-
-        ``validation_attempted`` / ``validity`` mirror the PSVI attributes
-        (xsdbase.py:62-92): skip mode is attempted='none' →
-        validity='notKnown' (NOT a clean PASS), strict mode that stopped
-        at the first hit is 'partial', and an empty scope with nothing
-        checked is 'notKnown' rather than 'valid'."""
+        declared the constraint (elements.py:546-551). The error counts
+        come from the violation rows, because set- and drift-level
+        violations have no row projection to sum."""
         rows = df.groupBy(
             F.col(self.partition_col).cast("string").alias("partition_id")
         ).agg(F.count(F.lit(1)).alias("rows_checked"))
@@ -618,31 +600,13 @@ class ValidationEngine:
             F.count(F.lit(1)).alias("violation_count"),
             F.count_distinct("rule_id").alias("rules_failed"),
         )
-        n_viol = F.coalesce("violation_count", F.lit(0))
-        n_rows = F.coalesce("rows_checked", F.lit(0))
-        if attempted == "none":
-            validity = F.lit("notKnown")
-        elif attempted == "partial":
-            # strict stopped at the first hit: partitions with no recorded
-            # violation were not fully assessed — notKnown, not valid
-            validity = F.when(n_viol > 0, F.lit("invalid")).otherwise(F.lit("notKnown"))
-        else:
-            validity = (
-                F.when(n_viol > 0, F.lit("invalid"))
-                .when(n_rows == 0, F.lit("notKnown"))
-                .otherwise(F.lit("valid"))
-            )
-        joined = rows.join(vcounts, "partition_id", "full").select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            F.when(n_viol > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status"),
-            n_rows.alias("rows_checked"),
-            n_viol.alias("violation_count"),
+        return _verdict_rows(
+            rows.join(vcounts, "partition_id", "full"), run_id,
+            F.coalesce("violation_count", F.lit(0)),
+            F.coalesce("rows_checked", F.lit(0)),
             F.create_map(
                 F.lit("rules_failed"),
                 F.coalesce("rules_failed", F.lit(0)).cast("string"),
-            ).alias("metrics"),
-            F.lit(attempted).alias("validation_attempted"),
-            validity.alias("validity"),
+            ),
+            attempted,
         )
-        return joined

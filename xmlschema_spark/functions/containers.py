@@ -84,8 +84,10 @@ def decode_wav(data) -> tuple[np.ndarray, int]:
     order), PCM format only, 8/16-bit, multi-channel averaged to mono.
     Raises ValueError on any corruption — the row-drop/`decode_ok=false`
     signal of the multimodal operators."""
+    if data is None:  # a NULL payload is truncated, not a TypeError
+        data = b""
     buf = bytes(data) if not isinstance(data, (bytes, bytearray)) else data
-    if buf is None or len(buf) < 12:
+    if len(buf) < 12:
         raise ValueError("truncated RIFF header")
     if buf[0:4] != b"RIFF" or buf[8:12] != b"WAVE":
         raise ValueError(f"bad magic {buf[0:4]!r}/{buf[8:12]!r}")
@@ -263,8 +265,10 @@ def decode_gif(data) -> list[np.ndarray]:
     than the screen are composited onto the previous frame at their
     (left, top) offset, starting from the GCT background. Interlaced
     images are rejected (ValueError). Raises ValueError on corruption."""
+    if data is None:  # a NULL payload is truncated, not a TypeError
+        data = b""
     buf = bytes(data) if not isinstance(data, (bytes, bytearray)) else data
-    if buf is None or len(buf) < 13:
+    if len(buf) < 13:
         raise ValueError("truncated GIF header")
     if buf[0:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError(f"bad magic {buf[0:6]!r}")

@@ -759,11 +759,13 @@ def default_video_decode(data):
     (functions/containers.py); each frame is re-encoded as a lossless
     BMP payload of the engine codec, so every downstream image operator
     (decode_check, extract_features, resize) consumes frames directly.
-    Corrupt GIFs raise ValueError (row dropped, the coverage-check
-    signal); containers this build has no codec for raise
+    Corrupt GIFs and NULL payloads raise ValueError (row dropped, the
+    coverage-check signal); containers this build has no codec for raise
     NotImplementedError naming the ``decode_fn`` contract (loud, not a
     silent drop)."""
-    head = bytes(data[:6]) if data is not None else b""
+    if data is None:
+        raise ValueError("NULL video payload")
+    head = bytes(data[:6])
     if head in (b"GIF87a", b"GIF89a"):
         return [codec.encode_image(f, "bmp") for f in containers.decode_gif(data)]
     raise NotImplementedError(
@@ -775,10 +777,12 @@ def default_video_decode(data):
 def default_audio_decode(data):
     """Default ``audio_features`` codec hook: RIFF/WAVE PCM decodes via
     the pure-Python chunk-walk parser (functions/containers.py) to
-    (mono float64 samples, rate); corrupt WAVs raise ValueError
-    (``decode_ok=false`` row); other containers raise
+    (mono float64 samples, rate); corrupt WAVs and NULL payloads raise
+    ValueError (``decode_ok=false`` row); other containers raise
     NotImplementedError naming the ``decode_fn`` contract."""
-    head = bytes(data[:4]) if data is not None else b""
+    if data is None:
+        raise ValueError("NULL audio payload")
+    head = bytes(data[:4])
     if head == b"RIFF" and bytes(data[8:12]) == b"WAVE":
         return containers.decode_wav(data)
     raise NotImplementedError(

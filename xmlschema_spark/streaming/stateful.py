@@ -9,8 +9,8 @@ expires; output is the updated running row per key per batch), so it uses
 Structured Streaming's arbitrary-state API with an explicit state schema.
 
 State per partition_id: (rows_checked, violation_count). Each invocation
-folds the batch's pre-computed 0/1 violation flags into state and emits
-one updated verdict row.
+folds the batch's per-row error totals (computed JVM-side from the
+engine's compiled checks) into state and emits one updated verdict row.
 """
 
 from __future__ import annotations
@@ -49,16 +49,10 @@ def cumulative_verdicts(engine: "ValidationEngine", stream_df: DataFrame) -> Dat
     projection as the batch engine); only the keyed state fold runs in
     pandas, on tiny (partition_id, flag-sum) batches.
     """
-    flags = [
-        (~ok).cast("long").alias(r.rule_id) for r, ok, _ in engine._row_preds
-    ]
-    error_ids = [r.rule_id for r, _, _ in engine._row_preds if r.severity == "error"]
     wide = stream_df.select(
-        F.col(engine.partition_col).cast("string").alias("partition_id"), *flags
-    ).withColumn(
-        "__viol",
-        sum(F.col(rid) for rid in error_ids) if error_ids else F.lit(0),
-    ).select("partition_id", "__viol")
+        F.col(engine.partition_col).cast("string").alias("partition_id"),
+        engine._row_errors().alias("__viol"),
+    )
 
     def fold(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -82,18 +82,15 @@ def windowed_verdicts(
     """Event-time windowed verdict aggregation with late-data handling:
     per (window, partition) violation counts → PASS/FAIL, emitted once the
     watermark passes (standard watermark + windowed agg pattern)."""
-    # row_violations drops the time column, so the wide 0/1 projection is
-    # rebuilt from the source with the time column kept in it
-    src = stream_df.withWatermark(time_col, watermark)
-    checks = [
-        (~ok).cast("int").alias(r.rule_id)
-        for r, ok, _ in engine._row_preds
-    ]
-    wide = src.select(time_col, F.col(engine.partition_col).alias("partition_id"), *checks)
-    total = sum(F.col(r.rule_id) for r, _, _ in engine._row_preds)
+    # row_violations drops the time column, so the per-row error total is
+    # projected from the source with the time column kept beside it
+    wide = stream_df.withWatermark(time_col, watermark).select(
+        time_col,
+        F.col(engine.partition_col).alias("partition_id"),
+        engine._row_errors().alias("__viol"),
+    )
     return (
-        wide.withColumn("__viol", total)
-        .groupBy(F.window(time_col, window).alias("win"), "partition_id")
+        wide.groupBy(F.window(time_col, window).alias("win"), "partition_id")
         .agg(
             F.count(F.lit(1)).alias("rows_checked"),
             F.sum("__viol").alias("violation_count"),
