@@ -234,6 +234,8 @@ def _img_rows():
         ("alien", b"GIF8" + b"\x00" * 8, 5, 3, "png", "p1"),  # unknown magic
         ("null_bytes", None, 5, 3, "png", "p1"),     # not_null's job, skipped
         ("null_meta", good, None, None, None, "p1"),  # null declared: skipped
+        ("empty", b"", 5, 3, "png", "p0"),           # zero-byte payload
+        ("one_byte", b"X", 5, 3, "png", "p0"),       # 1-byte payload
     ]
 
 
@@ -260,6 +262,8 @@ def test_header_check_violations(spark):
     got = sorted((r["row_id"], r["rule_id"], r["partition_id"]) for r in out.collect())
     assert got == [
         ("alien", "header_magic", "p1"),
+        ("empty", "header_short", "p0"),
+        ("one_byte", "header_short", "p0"),
         ("short", "header_short", "p1"),
         ("wrong_fmt", "header_fmt_match", "p0"),
         ("wrong_h", "header_h_match", "p1"),
@@ -292,6 +296,8 @@ def test_header_consistent_rule_kind_through_engine(spark):
     # hdr_all fires on every header defect; null bytes / null metadata pass
     assert got == [
         ("hdr_all", "alien"),
+        ("hdr_all", "empty"),
+        ("hdr_all", "one_byte"),
         ("hdr_all", "short"),
         ("hdr_all", "wrong_fmt"),
         ("hdr_all", "wrong_h"),
@@ -419,13 +425,21 @@ def test_volume_anomaly_randomized_vs_reference(spark):
     out.unpersist()
 
 
-def test_header_check_is_pure_catalyst(spark):
-    """No Python evaluation and no shuffle: the plan is scan + project +
-    generate, all inside whole-stage codegen."""
+@pytest.mark.parametrize(
+    "op, id_col",
+    [("header_check", "image_id"), ("wav_header_check", "audio_id"),
+     ("gif_header_check", "video_id")],
+)
+def test_header_check_is_pure_catalyst(spark, op, id_col):
+    """No Python evaluation and no shuffle: the plan of every container's
+    header operator is scan + project + generate, all inside whole-stage
+    codegen."""
     df = spark.createDataFrame(
-        _img_rows(), "image_id string, bytes binary, w int, h int, fmt string, part string"
+        [(r[0], r[1], r[2], r[3], r[4], r[5], 16000, 1, 16, 100) for r in _img_rows()],
+        f"{id_col} string, bytes binary, w int, h int, fmt string, part string, "
+        "sample_rate int, channels int, bits int, n_samples long",
     )
-    plan = multimodal.header_check(df, part_col="part")._jdf.queryExecution().executedPlan().toString()
+    plan = getattr(multimodal, op)(df, id_col=id_col, part_col="part")._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     for marker in ("ArrowEvalPython", "BatchEvalPython", "FlatMapsInPandas", "PythonUDF"):
         assert marker not in plan

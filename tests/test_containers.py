@@ -354,6 +354,8 @@ def test_gif_header_check_rules(spark):
         ("bad_h", bytearray(good), 5, 9),
         ("nullb", None, 5, 7),
         ("nulldims", bytearray(good), None, None),
+        ("empty", bytearray(b""), 5, 7),
+        ("one_byte", bytearray(b";"), 5, 7),
     ]
     df = spark.createDataFrame(rows, "video_id string, bytes binary, w int, h int")
     got = sorted(
@@ -365,6 +367,8 @@ def test_gif_header_check_rules(spark):
         ("bad_h", "gif_h_match"),
         ("bad_w", "gif_w_match"),
         ("cut", "gif_trailer"),
+        ("empty", "gif_short"),
+        ("one_byte", "gif_short"),
         ("short", "gif_short"),
     ]
     # sanity on the LSD arithmetic the rule decodes
@@ -372,9 +376,9 @@ def test_gif_header_check_rules(spark):
 
 
 def test_gif_header_rule_kind(spark):
+    from xmlschema_spark.compiler import compile_row_rule
     from xmlschema_spark.engine import ValidationEngine
     from xmlschema_spark.rules import Rule, RuleCompileError, RuleSet
-    from xmlschema_spark.operators.multimodal import _gif_rule_ok
 
     good = containers.encode_gif([np.zeros((4, 4, 3), np.uint8)])
     df = spark.createDataFrame(
@@ -388,15 +392,16 @@ def test_gif_header_rule_kind(spark):
         df, run_id="gif", with_stats=False
     )
     assert [r.row_id for r in res.violations.collect()] == ["b"]
-    with pytest.raises(RuleCompileError, match="gif_header_consistent"):
-        _gif_rule_ok(Rule(rule_id="x", kind="gif_header_consistent",
-                          column="bytes", params={"check": "fps"}))
+    with pytest.raises(RuleCompileError, match="gif_header_consistent check must be one of"):
+        compile_row_rule(Rule(rule_id="x", kind="gif_header_consistent",
+                              column="bytes", params={"check": "fps"}))
 
 
-def test_wav_header_rule_kind_bad_check_raises():
+def test_wav_header_rule_kind_bad_check_raises(spark):
+    from xmlschema_spark.compiler import compile_row_rule
+    from xmlschema_spark.operators import multimodal  # noqa: F401 — registers the kind
     from xmlschema_spark.rules import Rule, RuleCompileError
-    from xmlschema_spark.operators.multimodal import _wav_rule_ok
 
-    with pytest.raises(RuleCompileError, match="wav_header_consistent"):
-        _wav_rule_ok(Rule(rule_id="x", kind="wav_header_consistent",
-                          column="bytes", params={"check": "tempo"}))
+    with pytest.raises(RuleCompileError, match="wav_header_consistent check must be one of"):
+        compile_row_rule(Rule(rule_id="x", kind="wav_header_consistent",
+                              column="bytes", params={"check": "tempo"}))

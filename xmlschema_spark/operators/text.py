@@ -412,20 +412,18 @@ def fingerprint_md5(col, k: int = 8) -> Column:
     return F.md5(F.concat_ws(",", smallest))
 
 
-def _bigram_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, w1, w2) — one row per adjacent token pair, :func:`tokens`
-    tokenization. Docs with < 2 tokens emit nothing."""
+def _ngram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, w1, …, wn) — one row per run of ``n`` adjacent tokens,
+    :func:`tokens` tokenization. Docs with < ``n`` tokens emit nothing."""
     toks = tokens(F.col(text_col))
-    n2 = F.size(toks) - 1
-    pairs = F.when(
-        n2 >= 1,
-        F.arrays_zip(
-            F.slice(toks, 1, n2).alias("w1"), F.slice(toks, 2, n2).alias("w2")
-        ),
+    m = F.size(toks) - (n - 1)
+    grams = F.when(
+        m >= 1,
+        F.arrays_zip(*(F.slice(toks, k, m).alias(f"w{k}") for k in range(1, n + 1))),
     )
     return (
-        df.select(F.col(id_col).alias("__id"), F.explode(pairs).alias("__p"))
-        .select("__id", F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
+        df.select(F.col(id_col).alias("__id"), F.explode(grams).alias("__p"))
+        .select("__id", *(F.col(f"__p.w{k}").alias(f"w{k}") for k in range(1, n + 1)))
     )
 
 
@@ -474,12 +472,12 @@ def ngram_lm_score(
         mid = "__mid"
     else:
         mid = id_col
-    mbg = _bigram_rows(model, mid, mtext)
+    mbg = _ngram_rows(model, mid, mtext, 2)
     bigram_counts = mbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c12"))
     ctx_counts = mbg.groupBy("w1").agg(F.count(F.lit(1)).alias("__c1"))
     vocab = mbg.agg(F.count_distinct(F.col("w2")).alias("__v"))
 
-    doc_bg = _bigram_rows(df, id_col, text_col)
+    doc_bg = _ngram_rows(df, id_col, text_col, 2)
     scored = (
         doc_bg.join(bigram_counts, ["w1", "w2"], "left")
         .join(ctx_counts, ["w1"], "left")
@@ -506,30 +504,6 @@ def ngram_lm_score(
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             "avg_logp",
             F.exp(-F.col("avg_logp")).alias("ppl"),
-        )
-    )
-
-
-def _trigram_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, w1, w2, w3) — one row per adjacent token triple,
-    :func:`tokens` tokenization. Docs with < 3 tokens emit nothing."""
-    toks = tokens(F.col(text_col))
-    n3 = F.size(toks) - 2
-    trips = F.when(
-        n3 >= 1,
-        F.arrays_zip(
-            F.slice(toks, 1, n3).alias("w1"),
-            F.slice(toks, 2, n3).alias("w2"),
-            F.slice(toks, 3, n3).alias("w3"),
-        ),
-    )
-    return (
-        df.select(F.col(id_col).alias("__id"), F.explode(trips).alias("__p"))
-        .select(
-            "__id",
-            F.col("__p.w1").alias("w1"),
-            F.col("__p.w2").alias("w2"),
-            F.col("__p.w3").alias("w3"),
         )
     )
 
@@ -582,8 +556,8 @@ def ngram_lm3_score(
         mid = "__mid"
     else:
         mid = id_col
-    mtg = _trigram_rows(model, mid, mtext)
-    mbg = _bigram_rows(model, mid, mtext)
+    mtg = _ngram_rows(model, mid, mtext, 3)
+    mbg = _ngram_rows(model, mid, mtext, 2)
     mtok = model.select(F.explode(tokens(F.col(mtext))).alias("w"))
     c123 = mtg.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("__c123"))
     c12 = mbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c12"))
@@ -593,7 +567,7 @@ def ngram_lm3_score(
     )
 
     a = F.lit(float(alpha))
-    doc_tg = _trigram_rows(df, id_col, text_col)
+    doc_tg = _ngram_rows(df, id_col, text_col, 3)
     joined = (
         doc_tg.join(c123, ["w1", "w2", "w3"], "left")
         .join(c12, ["w1", "w2"], "left")

@@ -25,13 +25,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` maps to ``local[N]``. ``shuffle_partitions`` defaults to 2×
-    cores locally (on a real cluster you would size it to data volume:
-    ~target 128–256 MB per shuffle partition).
+    ``cores`` maps to ``local[N]``; ``"*"`` means the cores this process
+    may run on. ``shuffle_partitions`` defaults to 2× cores locally (on a
+    real cluster you would size it to data volume: ~target 128–256 MB per
+    shuffle partition). ``spark.driver.memory`` is ``SPARK_DRIVER_MEM`` if
+    set, else half the host's physical memory, capped at 48g.
     """
     if isinstance(cores, str) and cores != "*":
         cores = int(cores)
-    n_cores = os.cpu_count() or 8 if cores == "*" else int(cores)
+    n_cores = len(os.sched_getaffinity(0)) if cores == "*" else cores
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * n_cores)
 
@@ -58,7 +60,7 @@ def get_spark(
         # MB-scale binary payloads — humongous G1 allocations that turn GC
         # into a serial bottleneck exactly when every core is scanning
         .config("spark.sql.inMemoryColumnarStorage.batchSize", str(arrow_max_records))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _host_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
@@ -71,6 +73,13 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def _host_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB (at least 1), capped at
+    48g: the driver JVM shares the host with the Python workers."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(48, half))}g"
 
 
 def package_zip() -> Path | None:

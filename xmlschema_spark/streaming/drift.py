@@ -24,23 +24,19 @@ from pyspark.sql import functions as F
 _EPS = 1e-6
 
 
-def windowed_psi(
+def _windowed_histogram(
     stream_df: DataFrame,
     column: str,
     time_col: str,
     reference: tuple[float, float, list[float]],
-    window_duration: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming DataFrame of ``(window, psi, n)`` rows — one per closed
-    event-time window, emitted once the watermark passes (late rows
-    within the watermark are folded in before emission).
-
-    ``reference`` is ``(lo, hi, ref_p)`` from
-    :func:`~xmlschema_spark.operators.drift.reference_histogram`, computed
-    on a batch reference table; buckets use the same bounds so the two
-    histograms are comparable.
-    """
+    window_duration: str,
+    watermark: str,
+):
+    """The one stateful windowed aggregation both monitors share:
+    ``column`` bucketed on the reference grid, one conditional count per
+    bucket. Returns ``(agg, ps, total)`` — the aggregated stream, the
+    epsilon-smoothed window proportion of each bucket, and the window's
+    non-NULL row count, the last two as Columns over ``agg``."""
     lo, hi, ref_p = reference
     bins = len(ref_p)
     span = (hi - lo) or 1.0
@@ -63,11 +59,35 @@ def windowed_psi(
         .agg(*counts)
     )
     total = sum((F.col(f"__n{i}") for i in range(bins)), F.lit(0))
+    ps = [F.col(f"__n{i}") / F.greatest(total, F.lit(1)) + F.lit(_EPS) for i in range(bins)]
+    return agg, ps, total
+
+
+def windowed_psi(
+    stream_df: DataFrame,
+    column: str,
+    time_col: str,
+    reference: tuple[float, float, list[float]],
+    window_duration: str = "10 minutes",
+    watermark: str = "10 minutes",
+) -> DataFrame:
+    """Streaming DataFrame of ``(window, psi, n)`` rows — one per closed
+    event-time window, emitted once the watermark passes (late rows
+    within the watermark are folded in before emission).
+
+    ``reference`` is ``(lo, hi, ref_p)`` from
+    :func:`~xmlschema_spark.operators.drift.reference_histogram`, computed
+    on a batch reference table; buckets use the same bounds so the two
+    histograms are comparable.
+    """
+    ref_p = reference[2]
+    agg, ps, total = _windowed_histogram(
+        stream_df, column, time_col, reference, window_duration, watermark
+    )
     terms = []
-    for i in range(bins):
-        p = F.col(f"__n{i}") / F.greatest(total, F.lit(1)) + F.lit(_EPS)
-        q = F.lit(ref_p[i] + _EPS)
-        terms.append((p - q) * (F.log(p) - F.lit(math.log(ref_p[i] + _EPS))))
+    for p, r in zip(ps, ref_p):
+        q = F.lit(r + _EPS)
+        terms.append((p - q) * (F.log(p) - F.lit(math.log(r + _EPS))))
     psi = sum(terms[1:], terms[0])
     return agg.select("window", psi.alias("psi"), total.cast("long").alias("n"))
 
@@ -95,32 +115,13 @@ def windowed_divergence(
     """
     if metric not in ("chi2", "jsd"):
         raise ValueError(f"unknown divergence metric {metric!r}")
-    lo, hi, ref_p = reference
-    bins = len(ref_p)
-    span = (hi - lo) or 1.0
-    bucket = F.when(
-        F.col(column).isNotNull(),
-        F.least(
-            F.greatest(
-                F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins), F.lit(0)
-            ),
-            F.lit(bins - 1),
-        ),
+    ref_p = reference[2]
+    agg, ps, total = _windowed_histogram(
+        stream_df, column, time_col, reference, window_duration, watermark
     )
-    counts = [
-        F.sum(F.when(bucket == i, 1).otherwise(0)).alias(f"__n{i}")
-        for i in range(bins)
-    ]
-    agg = (
-        stream_df.withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, window_duration).alias("window"))
-        .agg(*counts)
-    )
-    total = sum((F.col(f"__n{i}") for i in range(bins)), F.lit(0))
     terms = []
-    for i in range(bins):
-        p = F.col(f"__n{i}") / F.greatest(total, F.lit(1)) + F.lit(_EPS)
-        q = ref_p[i] + _EPS  # python float: folds to a literal per bucket
+    for p, r in zip(ps, ref_p):
+        q = r + _EPS  # python float: folds to a literal per bucket
         if metric == "chi2":
             terms.append((p - F.lit(q)) * (p - F.lit(q)) / F.lit(q))
         else:
