@@ -306,6 +306,43 @@ def test_header_consistent_rule_kind_through_engine(spark):
     ]
 
 
+def test_header_non_integer_declared_w_is_a_violation(spark):
+    """A declared ``w`` that is present but not an integer ("5x" in a
+    string column) cannot equal the header word: the operator and the
+    rule kind both report it instead of aborting on an ANSI cast error."""
+    from xmlschema_spark.engine import ValidationEngine
+    from xmlschema_spark.rules import Rule, RuleSet
+
+    rows = [(*r[:2], None if r[2] is None else str(r[2]), *r[3:]) for r in _img_rows()]
+    rows.append(("w_5x", rows[0][1], "5x", 3, "png", "p0"))
+    df = spark.createDataFrame(
+        rows, "image_id string, bytes binary, w string, h int, fmt string, part string"
+    )
+    got = sorted((r["row_id"], r["rule_id"]) for r in multimodal.header_check(df).collect())
+    assert got == [
+        ("alien", "header_magic"),
+        ("empty", "header_short"),
+        ("one_byte", "header_short"),
+        ("short", "header_short"),
+        ("w_5x", "header_w_match"),
+        ("wrong_fmt", "header_fmt_match"),
+        ("wrong_h", "header_h_match"),
+        ("wrong_w", "header_w_match"),
+    ]
+    rules = RuleSet(
+        [
+            Rule("hdr_all", "header_consistent", "bytes"),
+            Rule("hdr_w", "header_consistent", "bytes", {"check": "w"}),
+        ]
+    )
+    res = ValidationEngine(rules, id_col="image_id", partition_col="part").validate(
+        df, run_id="hdr5x", with_stats=False
+    )
+    got = sorted((r["rule_id"], r["row_id"]) for r in res.violations.collect())
+    assert ("hdr_all", "w_5x") in got and ("hdr_w", "w_5x") in got
+    assert [v for v in got if v[0] == "hdr_w"] == [("hdr_w", "w_5x"), ("hdr_w", "wrong_w")]
+
+
 def test_header_consistent_rejects_bad_check(spark):
     from xmlschema_spark.compiler import compile_row_rule
     from xmlschema_spark.rules import Rule, RuleCompileError

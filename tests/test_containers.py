@@ -334,6 +334,31 @@ def test_wav_header_rule_kind_single_check(spark):
     assert res.violations.count() == 9  # only the rate_mismatch family
 
 
+_GIF_GOOD = containers.encode_gif([np.zeros((7, 5, 3), np.uint8)])
+# (video_id, bytes, w, h) crafted rows and the violations each fires
+_GIF_ROWS = [
+    ("ok", bytearray(_GIF_GOOD), 5, 7),
+    ("alien", bytearray(b"RIFF" + _GIF_GOOD[4:]), 5, 7),
+    ("short", bytearray(_GIF_GOOD[:8]), 5, 7),
+    ("cut", bytearray(_GIF_GOOD[:-1]), 5, 7),
+    ("bad_w", bytearray(_GIF_GOOD), 6, 7),
+    ("bad_h", bytearray(_GIF_GOOD), 5, 9),
+    ("nullb", None, 5, 7),
+    ("nulldims", bytearray(_GIF_GOOD), None, None),
+    ("empty", bytearray(b""), 5, 7),
+    ("one_byte", bytearray(b";"), 5, 7),
+]
+_GIF_VIOLATIONS = [
+    ("alien", "gif_magic"),
+    ("bad_h", "gif_h_match"),
+    ("bad_w", "gif_w_match"),
+    ("cut", "gif_trailer"),
+    ("empty", "gif_short"),
+    ("one_byte", "gif_short"),
+    ("short", "gif_short"),
+]
+
+
 def test_gif_header_check_rules(spark):
     """Zero-decode GIF pre-flight: each crafted row fires exactly its
     rule; declared dims come from the logical screen descriptor."""
@@ -341,38 +366,72 @@ def test_gif_header_check_rules(spark):
 
     from xmlschema_spark.operators import multimodal
 
-    good = containers.encode_gif([np.zeros((7, 5, 3), np.uint8)])
-    alien = b"RIFF" + good[4:]
-    short = good[:8]
-    no_trailer = good[:-1]
-    rows = [
-        ("ok", bytearray(good), 5, 7),
-        ("alien", bytearray(alien), 5, 7),
-        ("short", bytearray(short), 5, 7),
-        ("cut", bytearray(no_trailer), 5, 7),
-        ("bad_w", bytearray(good), 6, 7),
-        ("bad_h", bytearray(good), 5, 9),
-        ("nullb", None, 5, 7),
-        ("nulldims", bytearray(good), None, None),
-        ("empty", bytearray(b""), 5, 7),
-        ("one_byte", bytearray(b";"), 5, 7),
-    ]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary, w int, h int")
+    df = spark.createDataFrame(_GIF_ROWS, "video_id string, bytes binary, w int, h int")
     got = sorted(
         (r.row_id, r.rule_id)
         for r in multimodal.gif_header_check(df).collect()
     )
-    assert got == [
-        ("alien", "gif_magic"),
-        ("bad_h", "gif_h_match"),
-        ("bad_w", "gif_w_match"),
-        ("cut", "gif_trailer"),
-        ("empty", "gif_short"),
-        ("one_byte", "gif_short"),
-        ("short", "gif_short"),
-    ]
+    assert got == _GIF_VIOLATIONS
     # sanity on the LSD arithmetic the rule decodes
-    assert struct.unpack_from("<HH", bytes(good), 6) == (5, 7)
+    assert struct.unpack_from("<HH", bytes(_GIF_GOOD), 6) == (5, 7)
+
+
+def _header_rule_violations(df, kind: str, id_col: str, check: str = "all"):
+    """Sorted row ids the ``kind`` rule (one ``check``) flags through the engine."""
+    from pyspark.sql import functions as F
+
+    from xmlschema_spark.engine import ValidationEngine
+    from xmlschema_spark.rules import Rule, RuleSet
+
+    rules = RuleSet([Rule(rule_id="r", kind=kind, column="bytes", params={"check": check})])
+    res = ValidationEngine(rules, id_col=id_col, partition_col="part").validate(
+        df.withColumn("part", F.lit("p0")), run_id=kind, with_stats=False
+    )
+    return sorted(r.row_id for r in res.violations.collect())
+
+
+def test_gif_header_non_integer_declared_w_is_a_violation(spark):
+    """A declared ``w`` that is present but not an integer ("5x" in a
+    string column) fails ``gif_w_match`` in the operator and the rule
+    kind, instead of aborting on an ANSI cast error."""
+    from xmlschema_spark.operators import multimodal
+
+    rows = [(i, b, None if w is None else str(w), h) for i, b, w, h in _GIF_ROWS]
+    rows.append(("w_5x", bytearray(_GIF_GOOD), "5x", 7))
+    df = spark.createDataFrame(rows, "video_id string, bytes binary, w string, h int")
+    got = sorted((r.row_id, r.rule_id) for r in multimodal.gif_header_check(df).collect())
+    assert got == sorted([*_GIF_VIOLATIONS, ("w_5x", "gif_w_match")])
+    assert _header_rule_violations(df, "gif_header_consistent", "video_id", "w") == [
+        "bad_w", "w_5x",
+    ]
+    assert "w_5x" in _header_rule_violations(df, "gif_header_consistent", "video_id")
+
+
+def test_wav_header_non_integer_declared_values_are_violations(spark):
+    """Declared ``sample_rate`` / ``n_samples`` that are present but not
+    integers ("5x" in string columns) fail ``wav_rate_match`` /
+    ``wav_n_samples_match`` in the operator and the rule kind, instead of
+    aborting on an ANSI cast error; NULL declared values still pass."""
+    from xmlschema_spark.operators import multimodal
+
+    good = bytearray(containers.encode_wav(_sine(), 8000))  # mono, 16-bit, 1600 samples
+    rows = [
+        ("ok", good, "8000", 1, 16, "1600"),
+        ("rate_5x", good, "5x", 1, 16, "1600"),
+        ("n_5x", good, "8000", 1, 16, "5x"),
+        ("null_meta", good, None, None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "audio_id string, bytes binary, sample_rate string, channels int, bits int,"
+        " n_samples string",
+    )
+    got = sorted((r.row_id, r.rule_id) for r in multimodal.wav_header_check(df).collect())
+    assert got == [("n_5x", "wav_n_samples_match"), ("rate_5x", "wav_rate_match")]
+    kind = "wav_header_consistent"
+    assert _header_rule_violations(df, kind, "audio_id", "rate") == ["rate_5x"]
+    assert _header_rule_violations(df, kind, "audio_id", "n_samples") == ["n_5x"]
+    assert _header_rule_violations(df, kind, "audio_id") == ["n_5x", "rate_5x"]
 
 
 def test_gif_header_rule_kind(spark):

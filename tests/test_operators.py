@@ -146,18 +146,30 @@ def test_fingerprint_order_insensitive_equal_content(spark, docs):
 def test_psi_fast_path_matches_sql_path(spark):
     rows = [(f"p{i % 4}", float(i % 50) + (25.0 if i % 4 == 3 else 0.0)) for i in range(2000)]
     df = spark.createDataFrame(rows, "part string, x double")
-    fast = {r.part: r.psi for r in drift.psi(df, "x", "part", bins=10).collect()}
-    slow = {
-        r.part: r.psi
-        for r in drift.psi(df, "x", "part", bins=10, max_collected_cells=0).collect()
-    }
-    assert set(fast) == set(slow)
-    for p in fast:
-        assert abs(fast[p] - slow[p]) < 1e-9
-    # the shifted partition drifts most; the others score lower even though
-    # the pooled reference includes the drifted mass
-    assert fast["p3"] > 0.3
-    assert all(fast["p3"] > 2 * fast[p] for p in ("p0", "p1", "p2"))
+    # an explicit reference with a NULL and values outside df's [0, 74]:
+    # both paths drop the NULL and clamp the rest to the edge buckets
+    ref = spark.createDataFrame(
+        [(None,), (-40.0,), (3.0,), (3.0,), (20.0,), (60.0,), (500.0,)], "x double"
+    )
+    for reference in (None, ref):
+        fast = {
+            r.part: r.psi
+            for r in drift.psi(df, "x", "part", bins=10, reference=reference).collect()
+        }
+        slow = {
+            r.part: r.psi
+            for r in drift.psi(
+                df, "x", "part", bins=10, reference=reference, max_collected_cells=0
+            ).collect()
+        }
+        assert set(fast) == set(slow) == {"p0", "p1", "p2", "p3"}
+        for p in fast:
+            assert abs(fast[p] - slow[p]) < 1e-9, (reference, p)
+        if reference is None:
+            # the shifted partition drifts most; the others score lower even
+            # though the pooled reference includes the drifted mass
+            assert fast["p3"] > 0.3
+            assert all(fast["p3"] > 2 * fast[p] for p in ("p0", "p1", "p2"))
 
 
 def test_psi_empty_and_all_null(spark):
@@ -165,6 +177,11 @@ def test_psi_empty_and_all_null(spark):
     assert drift.psi(empty, "x", "part").count() == 0
     nulls = spark.createDataFrame([("a", None), ("b", None)], "part string, x double")
     assert drift.psi(nulls, "x", "part").count() == 0
+    # no rows, but the same schema as a non-empty result: the partition
+    # column keeps its type
+    full = spark.createDataFrame([(1, 1.0), (2, 2.0)], "part int, x double")
+    for df in (full.limit(0), full.withColumn("x", F.lit(None).cast("double")), full):
+        assert drift.psi(df, "x", "part").schema.simpleString() == "struct<part:int,psi:double>"
 
 
 def test_ks_detects_shift(spark):

@@ -224,19 +224,32 @@ def test_divergence_jsd_bounded_and_ordered(spark):
 
 def test_divergence_distributed_fallback_matches_driver_path(spark):
     """max_collected_cells=0 forces the skeleton-join SQL plan; it must
-    reproduce the driver-numpy result for both metrics."""
+    reproduce the driver-numpy result for every metric, with and without
+    an explicit reference."""
     from xmlschema_spark.operators import drift
 
     df = _drift_df(spark)
+    # an explicit reference with a NULL and values outside df's [0, 49]
+    ref = spark.createDataFrame(
+        [(None,), (-10.0,), (2.0,), (7.5,), (7.5,), (30.0,), (49.0,), (80.0,)], "v double"
+    )
     for metric in ("chi2", "jsd", "w1"):
-        fast = {r.part: r[metric] for r in drift.divergence(df, "v", "part", metric=metric).collect()}
-        dist = {
-            r.part: r[metric]
-            for r in drift.divergence(df, "v", "part", metric=metric, max_collected_cells=0).collect()
-        }
-        assert set(fast) == set(dist)
-        for k in fast:
-            assert dist[k] == pytest.approx(fast[k], rel=1e-9, abs=1e-12), (metric, k)
+        for reference in (None, ref):
+            fast = {
+                r.part: r[metric]
+                for r in drift.divergence(
+                    df, "v", "part", metric=metric, reference=reference
+                ).collect()
+            }
+            dist = {
+                r.part: r[metric]
+                for r in drift.divergence(
+                    df, "v", "part", metric=metric, reference=reference, max_collected_cells=0
+                ).collect()
+            }
+            assert set(fast) == set(dist) == {"stable", "shifted", "allnull"}
+            for k in fast:
+                assert dist[k] == pytest.approx(fast[k], rel=1e-9, abs=1e-12), (metric, reference, k)
 
 
 def test_divergence_rejects_unknown_metric(spark):

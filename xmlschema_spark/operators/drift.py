@@ -1,13 +1,15 @@
-"""Distribution-drift checks per partition: PSI (pure SQL) and KS
-(grouped-map pandas UDF).
+"""Distribution-drift checks per partition: the histogram family (PSI,
+chi2, JSD, W1) and KS.
 
 No reference analog — a north-star addition (SURVEY.md §2.8): each
 partition's distribution of a numeric column is compared against a
 reference distribution (by default the whole table's).
 
-- **PSI**: ONE distributed (partition, bucket) histogram aggregation;
-  the Σ (p−q)·ln(p/q) arithmetic runs driver-side in numpy on the tiny
-  result (SQL fallback above a cell cap — see ``psi``).
+- **Histogram drift** (:func:`psi`, :func:`divergence`): one shared core,
+  ``_histogram_drift`` — ONE distributed (partition, bucket) histogram
+  aggregation, the metric arithmetic driver-side in numpy on the tiny
+  result, and a distributed skeleton-join SQL fallback above a cell cap.
+  The metrics differ only in their final formula.
 - **KS** uses ``applyInPandas`` per partition (vectorized numpy, no
   per-row Python): exact empirical CDF vs a reference CDF evaluated on a
   quantile grid. Grid is computed once (approx_percentile, one pass) and
@@ -20,17 +22,187 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _EPS = 1e-6
 
 
-def _bucketize(df: DataFrame, column: str, lo: float, hi: float, bins: int):
+def _bucket(column: str, lo: float, hi: float, bins: int) -> Column:
+    """The bucket of ``column`` on the ``bins``-wide grid over [lo, hi]:
+    values outside the bounds clamp to the edge buckets, NULL values get a
+    NULL bucket."""
     span = (hi - lo) or 1.0
-    b = F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins)
-    return df.withColumn(
-        "__bucket", F.least(F.greatest(b, F.lit(0)), F.lit(bins - 1))
+    return F.when(
+        F.col(column).isNotNull(),
+        F.least(
+            F.greatest(F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins), F.lit(0)),
+            F.lit(bins - 1),
+        ),
+    )
+
+
+def _bounds(df: DataFrame, column: str) -> tuple:
+    """(min, max) of ``column`` as doubles; (None, None) when it has no
+    non-NULL value."""
+    return df.agg(F.min(column).cast("double"), F.max(column).cast("double")).first()
+
+
+def _bucket_counts(df: DataFrame, column: str, bucket: Column, bins: int) -> np.ndarray:
+    """Per-bucket counts of the non-NULL ``column`` values of ``df``: one
+    map-side-combined count aggregation, collected as a ``bins`` array."""
+    counts = np.zeros(bins)
+    for r in (
+        df.select(column)
+        .filter(F.col(column).isNotNull())
+        .groupBy(bucket.alias("__bucket"))
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .collect()
+    ):
+        counts[int(r["__bucket"])] += r["__n"]
+    return counts
+
+
+def _driver_value(metric: str, p0: np.ndarray, q0: np.ndarray, n, width: float):
+    """``metric`` of one partition on the driver, from its bucket
+    proportions ``p0``, the reference's ``q0``, its non-NULL count ``n``
+    and the bucket width."""
+    p, q = p0 + _EPS, q0 + _EPS
+    if metric == "psi":
+        return np.sum((p - q) * np.log(p / q))
+    if metric == "chi2":
+        return n * np.sum((p - q) ** 2 / q)
+    if metric == "jsd":
+        m = (p + q) / 2.0
+        return 0.5 * np.sum(p * np.log(p / m)) + 0.5 * np.sum(q * np.log(q / m))
+    return np.sum(np.abs(np.cumsum(p0 - q0))) * width
+
+
+def _sql_value(metric: str, p0: Column, q0: Column, n: Column, width: float) -> Column:
+    """``metric`` as one aggregate over a partition's ``bins`` grid rows —
+    the fallback's twin of :func:`_driver_value`. w1 reads the cumulative
+    gap ``__cumdiff`` the fallback adds for it."""
+    p, q = p0 + F.lit(_EPS), q0 + F.lit(_EPS)
+    if metric == "psi":
+        return F.sum((p - q) * F.log(p / q))
+    if metric == "chi2":
+        return n * F.sum((p - q) * (p - q) / q)
+    if metric == "jsd":
+        m = (p + q) / F.lit(2.0)
+        return F.lit(0.5) * F.sum(p * F.log(p / m)) + F.lit(0.5) * F.sum(q * F.log(q / m))
+    return F.sum(F.abs(F.col("__cumdiff"))) * F.lit(width)
+
+
+def _histogram_drift(
+    df: DataFrame,
+    column: str,
+    partition_col: str,
+    metric: str,
+    bins: int,
+    reference: DataFrame | None,
+    max_collected_cells: int,
+) -> DataFrame:
+    """(partition, ``metric``) for every partition of ``df`` — the one
+    execution of the histogram drift family.
+
+    Conventions: buckets are laid on the ``bins`` grid over ``df``'s
+    [min, max] of ``column`` (:func:`_bucket`); the reference's values
+    outside it clamp to the edge buckets. NULL values are not counted, but
+    their rows keep the partition present: a partition with no non-NULL
+    value compares an all-zero histogram. Both proportion vectors are
+    epsilon-shifted (``_EPS``) on the full grid before psi/chi2/jsd, so a
+    bucket with mass on one side only contributes a finite term; w1 works
+    on the unshifted proportions. An empty or all-NULL ``column`` gives no
+    rows.
+
+    Execution (see :func:`psi` for why): the bounds, then ONE distributed
+    (partition, bucket) count aggregation collected to the driver (plus
+    one bucket count of ``reference`` when given) and the metric in numpy
+    on that tiny histogram; above ``max_collected_cells`` cells, the
+    distributed :func:`_skeleton_drift` plan instead."""
+    schema = df.select(partition_col).schema.add(metric, "double")
+    lo, hi = _bounds(df, column)
+    if lo is None:
+        return df.sparkSession.createDataFrame([], schema)
+    bucket = _bucket(column, lo, hi, bins)
+    width = ((hi - lo) or 1.0) / bins
+    hist_rows = (
+        df.groupBy(F.col(partition_col).alias("__part"), bucket.alias("__bucket"))
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .limit(max_collected_cells + 1)
+        .collect()
+    )
+    if len(hist_rows) > max_collected_cells:
+        return _skeleton_drift(
+            df, column, partition_col, metric, bucket, bins, reference, width
+        )
+    if reference is None:
+        ref_counts = np.zeros(bins)  # the pooled partition counts, summed below
+    else:
+        ref_counts = _bucket_counts(reference, column, bucket, bins)
+    parts: dict = {}
+    for r in hist_rows:
+        counts = parts.setdefault(r["__part"], np.zeros(bins))
+        if r["__bucket"] is not None:
+            counts[int(r["__bucket"])] += r["__n"]
+            if reference is None:
+                ref_counts[int(r["__bucket"])] += r["__n"]
+    q0 = ref_counts / max(ref_counts.sum(), 1)
+    out = []
+    for part, counts in parts.items():
+        n = counts.sum()
+        out.append((part, float(_driver_value(metric, counts / max(n, 1), q0, n, width))))
+    return df.sparkSession.createDataFrame(out, schema)
+
+
+def _skeleton_drift(df, column, partition_col, metric, bucket, bins, reference, width):
+    """The distributed fallback of :func:`_histogram_drift`: partition and
+    reference histograms left-joined onto a (partition × bucket) skeleton,
+    so a bucket missing on either side still contributes its term."""
+    ref = reference if reference is not None else df
+    ref_hist = (
+        ref.select(column)
+        .filter(F.col(column).isNotNull())
+        .groupBy(bucket.alias("__bucket"))
+        .agg(F.count(F.lit(1)).alias("ref_n"))
+    )
+    # proportion via a 1-row total cross-join (a global window would funnel
+    # the histogram through a single partition)
+    ref_total = ref_hist.agg(F.sum("ref_n").alias("__total"))
+    ref_hist = ref_hist.crossJoin(ref_total).withColumn(
+        "ref_p", F.col("ref_n") / F.col("__total")
+    )
+    part_hist = (
+        df.select(partition_col, column)
+        .filter(F.col(column).isNotNull())
+        .groupBy(partition_col, bucket.alias("__bucket"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .withColumn("n_part", F.sum("n").over(Window.partitionBy(partition_col)))
+        .withColumn("p", F.col("n") / F.col("n_part"))
+    )
+    skeleton = (
+        df.select(partition_col)
+        .distinct()
+        .crossJoin(
+            df.sparkSession.range(bins).select(F.col("id").cast("long").alias("__bucket"))
+        )
+    )
+    joined = (
+        skeleton.join(part_hist, [partition_col, "__bucket"], "left")
+        .join(ref_hist.select("__bucket", "ref_p"), "__bucket", "left")
+    )
+    p0 = F.coalesce(F.col("p"), F.lit(0.0))
+    q0 = F.coalesce(F.col("ref_p"), F.lit(0.0))
+    if metric == "w1":
+        # cumulative CDF gap per bucket, then one agg — the window runs
+        # over the bins-row grid per partition key, not over raw rows
+        joined = joined.withColumn(
+            "__cumdiff",
+            F.sum(p0 - q0).over(Window.partitionBy(partition_col).orderBy("__bucket")),
+        )
+    n_part = F.coalesce(F.max("n_part"), F.lit(0))
+    return joined.groupBy(partition_col).agg(
+        _sql_value(metric, p0, q0, n_part, width).alias(metric)
     )
 
 
@@ -53,97 +225,8 @@ def psi(
     wall time. If the histogram exceeds ``max_collected_cells`` (pathological
     partition cardinality), we fall back to the fully distributed SQL plan.
     """
-    ref = reference if reference is not None else df
-    lo, hi = df.agg(
-        F.min(column).cast("double"), F.max(column).cast("double")
-    ).first()
-    if lo is None:
-        # empty input / all-null column: nothing to compare — no drift rows
-        return df.sparkSession.createDataFrame(
-            [], f"{partition_col} string, psi double"
-        )
-
-    span = (hi - lo) or 1.0
-    bucket = F.when(
-        F.col(column).isNotNull(),
-        F.least(
-            F.greatest(F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins), F.lit(0)),
-            F.lit(bins - 1),
-        ),
-    )  # NULL values → NULL bucket: keeps empty partitions present in the histogram
-    hist_rows = (
-        df.groupBy(F.col(partition_col).alias("__part"), bucket.alias("__bucket"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .limit(max_collected_cells + 1)
-        .collect()
-    )
-    if len(hist_rows) <= max_collected_cells:
-        ref_counts = np.zeros(bins)
-        if reference is not None:
-            ref_rows = (
-                ref.select(column)
-                .filter(F.col(column).isNotNull())
-                .groupBy(bucket.alias("__bucket"))
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            )
-            for r in ref_rows:
-                ref_counts[int(r["__bucket"])] += r["__n"]
-        parts: dict = {}
-        for r in hist_rows:
-            counts = parts.setdefault(r["__part"], np.zeros(bins))
-            if r["__bucket"] is not None:
-                counts[int(r["__bucket"])] += r["__n"]
-                if reference is None:
-                    ref_counts[int(r["__bucket"])] += r["__n"]
-        q = (ref_counts / max(ref_counts.sum(), 1)) + _EPS
-        out = []
-        for part, counts in parts.items():
-            p = (counts / max(counts.sum(), 1)) + _EPS
-            out.append((part, float(np.sum((p - q) * np.log(p / q)))))
-        return df.sparkSession.createDataFrame(
-            out, df.select(partition_col).schema.add("psi", "double")
-        )
-
-    ref_hist = (
-        _bucketize(ref.select(column).filter(F.col(column).isNotNull()), column, lo, hi, bins)
-        .groupBy("__bucket")
-        .agg(F.count(F.lit(1)).alias("ref_n"))
-    )
-    # proportion via a 1-row total cross-join (a global window would funnel
-    # the histogram through a single partition)
-    ref_total = ref_hist.agg(F.sum("ref_n").alias("__total"))
-    ref_hist = ref_hist.crossJoin(ref_total).withColumn(
-        "ref_p", F.col("ref_n") / F.col("__total")
-    )
-    part_hist = (
-        _bucketize(
-            df.select(partition_col, column).filter(F.col(column).isNotNull()),
-            column, lo, hi, bins,
-        )
-        .groupBy(partition_col, "__bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    part_hist = part_hist.withColumn(
-        "p", F.col("n") / F.sum("n").over(Window.partitionBy(partition_col))
-    )
-    # (partition × bucket) skeleton so a bucket missing on either side
-    # still contributes its epsilon-vs-mass term to the sum.
-    skeleton = (
-        df.select(partition_col)
-        .distinct()
-        .crossJoin(
-            df.sparkSession.range(bins).select(F.col("id").cast("long").alias("__bucket"))
-        )
-    )
-    joined = (
-        skeleton.join(part_hist, [partition_col, "__bucket"], "left")
-        .join(ref_hist.select("__bucket", "ref_p"), "__bucket", "left")
-    )
-    p = F.coalesce(F.col("p"), F.lit(0.0)) + F.lit(_EPS)
-    q = F.coalesce(F.col("ref_p"), F.lit(0.0)) + F.lit(_EPS)
-    return joined.groupBy(partition_col).agg(
-        F.sum((p - q) * F.log(p / q)).alias("psi")
+    return _histogram_drift(
+        df, column, partition_col, "psi", bins, reference, max_collected_cells
     )
 
 
@@ -176,11 +259,9 @@ def divergence(
       wobble. Needs no epsilon smoothing (cumulative differences are
       finite with zero masses).
 
-    chi2/jsd use the same smoothing convention as :func:`psi`: both
-    histograms are laid on the full ``bins`` grid and epsilon-shifted, so
-    a bucket with mass on only one side contributes a finite term. Same
-    execution shape for all metrics: ONE distributed (partition, bucket)
-    count aggregation, metric arithmetic driver-side in numpy on the tiny
+    Same smoothing and execution as :func:`psi` (the shared core
+    ``_histogram_drift``): ONE distributed (partition, bucket) count
+    aggregation, metric arithmetic driver-side in numpy on the tiny
     histogram, distributed SQL fallback above ``max_collected_cells``
     (w1's fallback adds a per-partition cumulative-sum window over the
     ``bins``-row grid before the final agg). ``reference=None`` compares
@@ -188,123 +269,9 @@ def divergence(
     """
     if metric not in ("chi2", "jsd", "w1"):
         raise ValueError(f"unknown divergence metric {metric!r}")
-    ref = reference if reference is not None else df
-    lo, hi = df.agg(
-        F.min(column).cast("double"), F.max(column).cast("double")
-    ).first()
-    if lo is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{partition_col} string, {metric} double"
-        )
-
-    span = (hi - lo) or 1.0
-    bucket = F.when(
-        F.col(column).isNotNull(),
-        F.least(
-            F.greatest(F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins), F.lit(0)),
-            F.lit(bins - 1),
-        ),
-    )  # NULL values → NULL bucket: keeps all-null partitions present
-    hist_rows = (
-        df.groupBy(F.col(partition_col).alias("__part"), bucket.alias("__bucket"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .limit(max_collected_cells + 1)
-        .collect()
+    return _histogram_drift(
+        df, column, partition_col, metric, bins, reference, max_collected_cells
     )
-    if len(hist_rows) <= max_collected_cells:
-        ref_counts = np.zeros(bins)
-        if reference is not None:
-            for r in (
-                ref.select(column)
-                .filter(F.col(column).isNotNull())
-                .groupBy(bucket.alias("__bucket"))
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            ):
-                ref_counts[int(r["__bucket"])] += r["__n"]
-        parts: dict = {}
-        for r in hist_rows:
-            counts = parts.setdefault(r["__part"], np.zeros(bins))
-            if r["__bucket"] is not None:
-                counts[int(r["__bucket"])] += r["__n"]
-                if reference is None:
-                    ref_counts[int(r["__bucket"])] += r["__n"]
-        q0 = ref_counts / max(ref_counts.sum(), 1)
-        q = q0 + _EPS
-        out = []
-        for part, counts in parts.items():
-            n_part = counts.sum()
-            p0 = counts / max(n_part, 1)
-            p = p0 + _EPS
-            if metric == "chi2":
-                val = float(n_part * np.sum((p - q) ** 2 / q))
-            elif metric == "w1":
-                val = float(np.sum(np.abs(np.cumsum(p0 - q0))) * (span / bins))
-            else:
-                m = (p + q) / 2.0
-                val = float(
-                    0.5 * np.sum(p * np.log(p / m)) + 0.5 * np.sum(q * np.log(q / m))
-                )
-            out.append((part, val))
-        return df.sparkSession.createDataFrame(
-            out, df.select(partition_col).schema.add(metric, "double")
-        )
-
-    # distributed fallback — the psi() skeleton-join shape plus a
-    # per-partition total for the chi2 sample-size factor
-    ref_hist = (
-        _bucketize(ref.select(column).filter(F.col(column).isNotNull()), column, lo, hi, bins)
-        .groupBy("__bucket")
-        .agg(F.count(F.lit(1)).alias("ref_n"))
-    )
-    ref_total = ref_hist.agg(F.sum("ref_n").alias("__total"))
-    ref_hist = ref_hist.crossJoin(ref_total).withColumn(
-        "ref_p", F.col("ref_n") / F.col("__total")
-    )
-    part_hist = (
-        _bucketize(
-            df.select(partition_col, column).filter(F.col(column).isNotNull()),
-            column, lo, hi, bins,
-        )
-        .groupBy(partition_col, "__bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    part_hist = part_hist.withColumn(
-        "n_part", F.sum("n").over(Window.partitionBy(partition_col))
-    ).withColumn("p", F.col("n") / F.col("n_part"))
-    skeleton = (
-        df.select(partition_col)
-        .distinct()
-        .crossJoin(
-            df.sparkSession.range(bins).select(F.col("id").cast("long").alias("__bucket"))
-        )
-    )
-    joined = (
-        skeleton.join(part_hist, [partition_col, "__bucket"], "left")
-        .join(ref_hist.select("__bucket", "ref_p"), "__bucket", "left")
-    )
-    if metric == "w1":
-        # cumulative CDF gap per bucket, then one agg — the window runs
-        # over the bins-row grid per partition key, not over raw rows
-        cum = F.sum(
-            F.coalesce(F.col("p"), F.lit(0.0)) - F.coalesce(F.col("ref_p"), F.lit(0.0))
-        ).over(Window.partitionBy(partition_col).orderBy("__bucket"))
-        return (
-            joined.withColumn("__cumdiff", cum)
-            .groupBy(partition_col)
-            .agg((F.sum(F.abs(F.col("__cumdiff"))) * F.lit(span / bins)).alias(metric))
-        )
-    p = F.coalesce(F.col("p"), F.lit(0.0)) + F.lit(_EPS)
-    q = F.coalesce(F.col("ref_p"), F.lit(0.0)) + F.lit(_EPS)
-    n_part = F.coalesce(F.max("n_part"), F.lit(0))
-    if metric == "chi2":
-        agg = (n_part * F.sum((p - q) * (p - q) / q)).alias(metric)
-    else:
-        m = (p + q) / F.lit(2.0)
-        agg = (
-            F.lit(0.5) * F.sum(p * F.log(p / m)) + F.lit(0.5) * F.sum(q * F.log(q / m))
-        ).alias(metric)
-    return joined.groupBy(partition_col).agg(agg)
 
 
 def ks_exact(
@@ -465,22 +432,11 @@ def reference_histogram(
     pass for bounds + one map-side-combined count agg; the result is a
     few dozen floats, meant to be shipped in a closure to
     :func:`xmlschema_spark.streaming.windowed_psi`."""
-    lo, hi = df.agg(
-        F.min(column).cast("double"), F.max(column).cast("double")
-    ).first()
+    lo, hi = _bounds(df, column)
     if lo is None:
         raise ValueError(f"reference for {column!r} is empty / all-null")
-    rows = (
-        _bucketize(df.select(column).filter(F.col(column).isNotNull()), column, lo, hi, bins)
-        .groupBy("__bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    counts = [0.0] * bins
-    for r in rows:
-        counts[int(r["__bucket"])] = float(r["n"])
-    total = sum(counts) or 1.0
-    return float(lo), float(hi), [c / total for c in counts]
+    counts = _bucket_counts(df, column, _bucket(column, lo, hi, bins), bins)
+    return float(lo), float(hi), (counts / max(counts.sum(), 1)).tolist()
 
 
 # Benford first-digit expected frequencies, log10(1 + 1/d), emitted as

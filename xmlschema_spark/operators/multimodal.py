@@ -291,7 +291,8 @@ def _gif_fields(b) -> dict:
 # field aspects (``magic`` owns foreign containers); a non-canonical WAV
 # passes the aspects that read its fields (``layout`` owns it), and a
 # non-PCM one the declared-metadata aspects (``pcm`` owns it); NULL
-# declared metadata passes its comparison.
+# declared metadata passes its comparison, and a declared value that is
+# not an integer fails it (``try_cast``: a verdict, not an ANSI cast error).
 class _Aspect(NamedTuple):
     rule_id: str
     column: str
@@ -310,7 +311,8 @@ def _framing(prefix: str, b, header_len: int, foreign):
 
 def _agrees(rule_id: str, column: str, skip, declared, header) -> _Aspect:
     """The declared integer ``declared`` equals the header word ``header``."""
-    return _Aspect(rule_id, column, skip | declared.isNull() | (declared.cast("long") == header))
+    n = declared.try_cast("long")
+    return _Aspect(rule_id, column, skip | declared.isNull() | (n.isNotNull() & (n == header)))
 
 
 def _image_aspects(b, declared) -> dict[str, _Aspect]:
@@ -334,6 +336,7 @@ def _wav_aspects(b, declared) -> dict[str, _Aspect]:
     skip_canon = skip | ~canonical
     skip_pcm = skip_canon | (hf["audio_format"] != 1)
     n_samples = declared("n_samples", "n_samples")
+    n = n_samples.try_cast("long")
     return {
         **table,
         "layout": _Aspect("wav_layout", "bytes", skip | canonical),
@@ -355,7 +358,7 @@ def _wav_aspects(b, declared) -> dict[str, _Aspect]:
         "n_samples": _Aspect(
             "wav_n_samples_match", "n_samples",
             skip_pcm | n_samples.isNull() | (hf["block_align"] <= 0)
-            | (hf["data_size"] == n_samples.cast("long") * hf["block_align"]),
+            | (n.isNotNull() & (hf["data_size"] == n * hf["block_align"])),
         ),
     }
 

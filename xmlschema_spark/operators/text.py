@@ -379,18 +379,23 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return feats.withColumn("quality_score", F.round(score, 6))
 
 
+def _shingles(col) -> Column:
+    """The distinct word 3-shingles of ``col`` (lower-cased, split on
+    non-alphanumerics); a text of fewer than 3 words is one shingle."""
+    words = F.filter(F.split(F.lower(col), r"[^\p{L}\p{N}]+"), lambda t: F.length(t) > 0)
+    n = F.size(words)
+    idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
+    return F.when(
+        n >= 3,
+        F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)))),
+    ).otherwise(F.array(F.concat_ws(" ", words)))
+
+
 def fingerprint(col, k: int = 8) -> Column:
     """Order-insensitive document fingerprint: xxhash64 over the k
     lexicographically-smallest word 3-shingles (a rolling-hash winnowing
     analog, fully JVM-side). Equal fingerprints ⇒ near-identical content."""
-    words = F.filter(F.split(F.lower(col), r"[^\p{L}\p{N}]+"), lambda t: F.length(t) > 0)
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
-    sh = F.when(
-        n >= 3,
-        F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)))),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    smallest = F.slice(F.array_sort(F.transform(sh, lambda s: F.xxhash64(s))), 1, k)
+    smallest = F.slice(F.array_sort(F.transform(_shingles(col), lambda s: F.xxhash64(s))), 1, k)
     return F.xxhash64(F.concat_ws(",", F.transform(smallest, lambda h: h.cast("string"))))
 
 
@@ -401,14 +406,7 @@ def fingerprint_md5(col, k: int = 8) -> Column:
     (hex-string materialization) but md5 exists in every engine, so this
     one is DuckDB-oracle verifiable end-to-end; use it when fingerprints
     must be reproducible outside Spark. Still fully JVM-side codegen."""
-    words = F.filter(F.split(F.lower(col), r"[^\p{L}\p{N}]+"), lambda t: F.length(t) > 0)
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
-    sh = F.when(
-        n >= 3,
-        F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)))),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    smallest = F.slice(F.array_sort(F.transform(sh, lambda s: F.md5(s))), 1, k)
+    smallest = F.slice(F.array_sort(F.transform(_shingles(col), lambda s: F.md5(s))), 1, k)
     return F.md5(F.concat_ws(",", smallest))
 
 

@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_EPS = 1e-6
+from xmlschema_spark.operators.drift import _EPS, _bucket
 
 
 def _windowed_histogram(
@@ -39,16 +39,7 @@ def _windowed_histogram(
     non-NULL row count, the last two as Columns over ``agg``."""
     lo, hi, ref_p = reference
     bins = len(ref_p)
-    span = (hi - lo) or 1.0
-    bucket = F.when(
-        F.col(column).isNotNull(),
-        F.least(
-            F.greatest(
-                F.floor((F.col(column) - F.lit(lo)) / F.lit(span) * bins), F.lit(0)
-            ),
-            F.lit(bins - 1),
-        ),
-    )
+    bucket = _bucket(column, lo, hi, bins)
     counts = [
         F.sum(F.when(bucket == i, 1).otherwise(0)).alias(f"__n{i}")
         for i in range(bins)
