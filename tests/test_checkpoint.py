@@ -90,6 +90,24 @@ def test_state_carries_lineage(spark, df, tmp_path):
     assert "ruleset_sha" in row and "input_schema" in row and "wall_sec" in row
 
 
+def test_run_builds_one_batch_engine(spark, df, tmp_path, monkeypatch):
+    """A multi-batch run compiles its batch rule set once, not per batch."""
+    from xmlschema_spark import checkpoint
+
+    run = CheckpointedRun(ValidationEngine(_ruleset()), str(tmp_path / "once"), "run_once")
+    built = []
+
+    class Spy(ValidationEngine):
+        def __init__(self, *args, **kwargs):
+            built.append(args)
+            super().__init__(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "ValidationEngine", Spy)
+    run.run(df, batch_size=3)  # 8 partitions -> 3 batches
+    assert {s["batch"] for s in run._load_state().values()} == {0, 1, 2}
+    assert len(built) == 1
+
+
 # ------------------------------------------------------- sink_format plumbing
 
 

@@ -3,6 +3,7 @@
 vector validation (vector_checks), and Benford first-digit conformance
 (drift.benford)."""
 
+import datetime as dt
 import math
 import random
 
@@ -601,3 +602,94 @@ def test_quality_report_bad_params(spark):
     ):
         with pytest.raises(ValueError):
             bad()
+
+
+# ---------------------------------------------------------------------------
+# event time: a malformed string timestamp is a NULL, not a crash
+# ---------------------------------------------------------------------------
+
+def _event_rows(bad):
+    # in time order: gaps of 7 h and 16 h (u1) and 48 h (u2); in seq
+    # order: regressions of 1 h (u1) and 48 h (u2)
+    return [
+        ("u1", 1, "2024-01-01 00:00:00"),
+        ("u1", 2, "2024-01-01 08:00:00"),
+        ("u1", 3, "2024-01-01 07:00:00"),
+        ("u1", 4, bad),
+        ("u1", 5, "2024-01-02 00:00:00"),
+        ("u2", 1, "2024-01-03 00:00:00"),
+        ("u2", 2, "2024-01-01 00:00:00"),
+    ]
+
+
+_NOW = "2024-01-05 00:00:00"
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda df: checks.time_gaps(df, "u", "ts", 3600),
+        lambda df: checks.time_gaps(df, "u", "ts", 3600, split_by="day"),
+        lambda df: checks.freshness(df, ["u"], "ts", _NOW, 86400),
+        lambda df: checks.sequence_regressions(df, "u", "seq", "ts", 0),
+        lambda df: checks.sequence_regressions(df, "u", "seq", "ts", 0, split_every=2),
+        lambda df: checks.quality_report(
+            df, ["u"], ["seq"], ts_col="ts", now=_NOW, max_age_sec=86400
+        ),
+    ],
+    ids=["time_gaps", "time_gaps_split", "freshness", "sequence_regressions",
+         "sequence_regressions_split", "quality_report"],
+)
+def test_malformed_event_time_reads_as_null(spark, op):
+    """Under ANSI casts a plain cast of "not a time" aborts the query; the
+    event-time checks must give the verdicts they give for a NULL there."""
+    schema = "u string, seq long, ts string"
+    got = op(spark.createDataFrame(_event_rows("not a time"), schema)).collect()
+    want = op(spark.createDataFrame(_event_rows(None), schema)).collect()
+    assert want
+    assert sorted(map(repr, got)) == sorted(map(repr, want))
+
+
+# ---------------------------------------------------------------------------
+# hostile input to the column-quality family: verdicts, not crashes
+# ---------------------------------------------------------------------------
+
+_HOSTILE_SCHEMA = "part string, s string, v double, ts timestamp"
+_T = dt.datetime(2024, 1, 7)
+_HOSTILE = {
+    "zero_rows": [],
+    "all_null": [("p1", None, None, None), ("p2", None, None, None)],
+    "nan_inf": [
+        ("p1", "a", float("nan"), _T),
+        ("p1", "b", float("inf"), _T),
+        ("p2", "c", float("-inf"), _T),
+        ("p2", "c", float("nan"), _T),
+    ],
+    "single_group": [("p1", "a", 1.0, _T), ("p1", None, 2.0, _T)],
+}
+_QUALITY_OPS = {
+    "completeness": lambda df: checks.completeness(df, ["part"], ["s", "v"]),
+    "distinctness": lambda df: checks.distinctness(df, ["part"], ["s", "v"]),
+    "quality_report": lambda df: checks.quality_report(df, ["part"], ["s", "v"]),
+    "quality_report_volume_ts": lambda df: checks.quality_report(
+        df, ["part"], ["s", "v"], ts_col="ts", now="2024-01-08 00:00:00",
+        max_age_sec=86400, volume_k=1.0,
+    ),
+    "volume_anomaly": lambda df: checks.volume_anomaly(df, ["part"], k=3.0),
+    "freshness": lambda df: checks.freshness(
+        df, ["part"], "ts", "2024-01-08 00:00:00", 86400
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_HOSTILE))
+@pytest.mark.parametrize("op", sorted(_QUALITY_OPS))
+def test_quality_family_hostile_input(spark, op, case):
+    fn = _QUALITY_OPS[op]
+    good = fn(_qr_df(spark))
+    expected = good.schema
+    good.unpersist()
+    out = fn(spark.createDataFrame(_HOSTILE[case], _HOSTILE_SCHEMA))
+    out.collect()
+    out.unpersist()
+    assert out.schema == expected

@@ -187,17 +187,15 @@ class CheckpointedRun:
 
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batches = [pending[i : i + batch_size] for i in range(0, len(pending), batch_size)]
+        # per-batch pass runs row + partition-scoped rules only; the
+        # table-scoped set rules run in finish() over the whole input.
+        batch_rules = RuleSet([r for r in self.engine.ruleset if r.scope != "table"])
+        eng = ValidationEngine(batch_rules, self.engine.id_col, part_col)
         for bi, batch in enumerate(batches):
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"injected failure before batch {bi}")
-            t0 = time.time()  # wall_sec covers the driver's plan build too
+            t0 = time.time()  # wall_sec covers validate()'s plan build too
             sub = df.filter(F.col(part_col).isin(batch))
-            # per-batch pass runs row + partition-scoped rules only; the
-            # table-scoped set rules run in finish() over the whole input.
-            batch_rules = RuleSet(
-                [r for r in self.engine.ruleset if not (r.scope == "table")]
-            )
-            eng = ValidationEngine(batch_rules, self.engine.id_col, part_col)
             result = eng.validate(sub, run_id=self.run_id, secondary=secondary, with_stats=False)
             # batch metrics ride the sink actions themselves via observe()
             # (Spark's Observation API): the aggregates are computed DURING

@@ -19,8 +19,179 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _event_us(ts_col: str) -> Column:
+    """Event time as integer microseconds. ``try_cast`` makes a value that
+    does not parse as a timestamp (a malformed string) NULL, so it is
+    treated exactly like a NULL event time instead of aborting the query
+    under ANSI casts; TIMESTAMP / TIMESTAMP_NTZ columns read unchanged."""
+    return F.unix_micros(F.col(ts_col).try_cast("timestamp"))
+
+
+# ---------------------------------------------------------------------------
+# Column-quality core: completeness, distinctness, quality_report,
+# volume_anomaly, freshness and streaming.quality_monitor_stream are
+# projections of these pieces.
+#
+# NULL / NaN conventions, for every operator built on the core:
+# - NULL is the only missing value: ``count(col)`` skips it, so
+#   n_null = n_rows - n_nonnull. NaN and +-Inf are ordinary non-NULL values
+#   (counted non-null; exact ``count_distinct`` counts NaN as one value).
+# - A group exists only if it has a row, so n_rows >= 1 and null_frac is
+#   always defined. Zero input rows give zero output rows of the same
+#   schema.
+# - A column with no non-NULL value has distinct_frac NULL and is neither
+#   constant nor low-cardinality.
+# - An event time that is NULL or does not parse (``_event_us``) is
+#   skipped by ``max``; a group with no valid event time has NULL
+#   last_event_us / age_us / is_stale.
+# ---------------------------------------------------------------------------
+
+
+def _check_args(
+    *,
+    group_cols: list[str] | None = None,
+    columns: list[str] | None = None,
+    no_columns: str = "columns must name at least one column",
+    max_null_frac: float | None = None,
+    min_distinct_frac: float | None = None,
+    ts_col: str | None = None,
+    now: str | None = None,
+    max_age_sec: int | None = None,
+    **positive: float | None,
+) -> None:
+    """The family's argument checks; an argument left at ``None`` is not
+    checked. ``positive`` names further arguments that must be > 0."""
+    if group_cols is not None and not group_cols:
+        raise ValueError("group_cols must name at least one column")
+    if columns is not None and not columns:
+        raise ValueError(no_columns)
+    overlap = set(columns or ()) & set(group_cols or ())
+    if overlap:
+        raise ValueError(f"columns overlap group_cols: {sorted(overlap)}")
+    if max_null_frac is not None and not 0.0 <= max_null_frac < 1.0:
+        raise ValueError(f"max_null_frac must be in [0, 1), got {max_null_frac}")
+    if min_distinct_frac is not None and not 0.0 <= min_distinct_frac <= 1.0:
+        raise ValueError(
+            f"min_distinct_frac must be in [0, 1], got {min_distinct_frac}"
+        )
+    if ts_col is not None and (now is None or max_age_sec is None):
+        raise ValueError("ts_col requires explicit now and max_age_sec")
+    for name, value in {"max_age_sec": max_age_sec, **positive}.items():
+        if value is not None and value <= 0:
+            raise ValueError(f"{name} must be > 0, got {value}")
+
+
+def _distinct_counter(exact: bool, rsd: float):
+    """Exact ``count_distinct`` (Expand, collapsed map-side before the
+    exchange) or HyperLogLog++ at relative error ``rsd`` (fixed-width
+    buffer, no Expand: the 10^12-row and the streaming-safe dial)."""
+    if exact:
+        return lambda c: F.count_distinct(F.col(c))
+    return lambda c: F.approx_count_distinct(c, rsd)
+
+
+def _quality_aggs(columns: list[str], distinct=None, extra=()) -> list[Column]:
+    """The one grouped aggregation: ``__n`` rows, ``__nn_i`` non-NULL per
+    column, ``__nd_i`` distinct per column when a ``distinct`` counter is
+    given, then any ``extra`` aggregates. The buffer is fixed-width, so
+    the shuffle carries group-cardinality rows."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    aggs += [F.count(F.col(c)).alias(f"__nn_{i}") for i, c in enumerate(columns)]
+    if distinct is not None:
+        aggs += [distinct(c).alias(f"__nd_{i}") for i, c in enumerate(columns)]
+    return aggs + list(extra)
+
+
+def _pivot(g: DataFrame, keys: list, columns: list[str], carry=()) -> DataFrame:
+    """Long form of the aggregation result ``g``: one row per key x
+    column with ``keys``, ``column``, ``n_rows``, ``n_nonnull``,
+    ``n_distinct`` (when ``g`` counted distincts), then the ``carry``
+    columns. ``keys`` are whatever the caller grouped by (group columns in
+    batch, the window's bounds in streaming). The inline runs on the
+    group-cardinality rows, never on the data."""
+    distinct = "__nd_0" in g.columns
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("column"),
+                F.col("__n").alias("n_rows"),
+                F.col(f"__nn_{i}").alias("n_nonnull"),
+                *([F.col(f"__nd_{i}").alias("n_distinct")] if distinct else []),
+            )
+            for i, c in enumerate(columns)
+        ]
+    )
+    return g.select(*keys, F.inline(rows), *carry)
+
+
+def _null_verdicts(frame: DataFrame, max_null_frac: float) -> DataFrame:
+    """``n_null``, ``null_frac`` and ``is_incomplete`` (strict >)."""
+    return (
+        frame.withColumn("n_null", F.col("n_rows") - F.col("n_nonnull"))
+        .withColumn("null_frac", F.col("n_null") / F.col("n_rows"))
+        .withColumn("is_incomplete", F.col("null_frac") > F.lit(float(max_null_frac)))
+    )
+
+
+def _distinct_verdicts(frame: DataFrame, min_distinct_frac: float) -> DataFrame:
+    """``distinct_frac`` = n_distinct / n_nonnull, ``is_constant`` (a
+    non-NULL column stuck on one value) and ``is_low_cardinality``
+    (distinct_frac < ``min_distinct_frac``)."""
+    nonnull = F.col("n_nonnull") > 0
+    return (
+        frame.withColumn(
+            "distinct_frac", F.when(nonnull, F.col("n_distinct") / F.col("n_nonnull"))
+        )
+        .withColumn("is_constant", nonnull & (F.col("n_distinct") <= 1))
+        .withColumn(
+            "is_low_cardinality",
+            F.coalesce(
+                F.col("distinct_frac") < F.lit(float(min_distinct_frac)), F.lit(False)
+            ),
+        )
+    )
+
+
+def _median(c: Column) -> Column:
+    return F.percentile(c, F.lit(0.5))
+
+
+def _approx_median(c: Column) -> Column:
+    return F.approx_percentile(c, F.lit(0.5), F.lit(10_000))
+
+
+def _mad_flag(g: DataFrame, n: str, k: float, median, names: tuple) -> DataFrame:
+    """``g`` plus the median of column ``n`` over all rows, its median
+    absolute deviation and the flag |n - median| > k * MAD, named
+    ``names`` = (median, mad, flag). Both statistics come back as
+    broadcast 1-row cross joins (no driver collect); ``median`` is the
+    percentile function. ``g`` is read three times: persist it first."""
+    med, mad, flag = names
+    with_med = g.crossJoin(F.broadcast(g.agg(median(F.col(n)).alias(med))))
+    dev = F.abs(F.col(n) - F.col(med))
+    return with_med.crossJoin(F.broadcast(with_med.agg(median(dev).alias(mad)))).withColumn(
+        flag, dev > F.lit(float(k)) * F.col(mad)
+    )
+
+
+def _materialized(out: DataFrame, cached: DataFrame) -> DataFrame:
+    """Persist and count ``out`` (group-cardinality rows), then release
+    the ``cached`` input it was built from."""
+    out = out.persist()
+    out.count()
+    cached.unpersist()
+    return out
+
+
+def _age(last_us: Column, now: str, max_age_sec: int) -> list[Column]:
+    """``age_us`` of the newest event ``last_us`` at ``now`` and
+    ``is_stale`` (strict >), exact integer microseconds."""
+    age = F.unix_micros(F.lit(now).cast("timestamp")) - last_us
+    return [age.alias("age_us"), (age > max_age_sec * 1_000_000).alias("is_stale")]
 
 
 def fd_violations(
@@ -81,50 +252,34 @@ def time_gaps(
     gaps compose by plain union."""
     if min_gap_sec <= 0:
         raise ValueError(f"min_gap_sec must be > 0, got {min_gap_sec}")
-    gap_us = min_gap_sec * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    order = [F.col(ts_col)]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col))
+    us = _event_us(ts_col)
+    by_time = [us] + ([F.col(tiebreak_col)] if tiebreak_col else [])
 
-    def _gaps(frame: DataFrame, extra_part: list[str]) -> DataFrame:
-        w = Window.partitionBy(scope_col, *extra_part).orderBy(*order)
-        prev = F.lag(us).over(w)
+    def _gaps(frame: DataFrame, part: list[str], order, last, first) -> DataFrame:
+        # consecutive (last, first) pairs per scope (+ part) in ``order``
+        w = Window.partitionBy(scope_col, *part).orderBy(*order)
         return (
             frame.select(
                 F.col(scope_col),
-                prev.alias("gap_start_us"),
-                us.alias("gap_end_us"),
-            )
-            .filter(
-                F.col("gap_start_us").isNotNull()
-                & ((F.col("gap_end_us") - F.col("gap_start_us")) > gap_us)
+                F.lag(last).over(w).alias("gap_start_us"),
+                first.alias("gap_end_us"),
             )
             .withColumn("gap_us", F.col("gap_end_us") - F.col("gap_start_us"))
+            .filter(F.col("gap_us") > min_gap_sec * 1_000_000)
         )
 
     if split_by is None:
-        return _gaps(df, [])
+        return _gaps(df, [], by_time, us, us)
 
     bucketed = df.withColumn(
-        "__split", F.date_trunc(split_by, F.col(ts_col).cast("timestamp"))
+        "__split", F.date_trunc(split_by, F.timestamp_micros(us))
     )
-    within = _gaps(bucketed, ["__split"])
+    within = _gaps(bucketed, ["__split"], by_time, us, us)
     summary = bucketed.groupBy(scope_col, "__split").agg(
         F.min(us).alias("__first_us"), F.max(us).alias("__last_us")
     )
-    wu = Window.partitionBy(scope_col).orderBy("__split")
-    boundary = (
-        summary.select(
-            F.col(scope_col),
-            F.lag("__last_us").over(wu).alias("gap_start_us"),
-            F.col("__first_us").alias("gap_end_us"),
-        )
-        .filter(
-            F.col("gap_start_us").isNotNull()
-            & ((F.col("gap_end_us") - F.col("gap_start_us")) > gap_us)
-        )
-        .withColumn("gap_us", F.col("gap_end_us") - F.col("gap_start_us"))
+    boundary = _gaps(
+        summary, [], ["__split"], F.col("__last_us"), F.col("__first_us")
     )
     return within.unionByName(boundary)
 
@@ -143,16 +298,10 @@ def freshness(
     whose feed silently stopped fails loudly even though every row it
     has is valid. One grouped agg (partial map-side), exact integer-µs
     age arithmetic."""
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
-    if max_age_sec <= 0:
-        raise ValueError(f"max_age_sec must be > 0, got {max_age_sec}")
-    now_us = F.unix_micros(F.lit(now).cast("timestamp"))
-    last_us = F.max(F.unix_micros(F.col(ts_col).cast("timestamp")))
+    _check_args(group_cols=group_cols, max_age_sec=max_age_sec)
+    last_us = F.max(_event_us(ts_col))
     return df.groupBy(*group_cols).agg(
-        last_us.alias("last_event_us"),
-        (now_us - last_us).alias("age_us"),
-        ((now_us - last_us) > max_age_sec * 1_000_000).alias("is_stale"),
+        last_us.alias("last_event_us"), *_age(last_us, now, max_age_sec)
     )
 
 
@@ -210,29 +359,13 @@ def volume_anomaly(
     ``quantile_cont``); ``exact=False`` swaps in ``approx_percentile``
     for billion-group cardinalities where exact percentile's per-buffer
     value collection is the bottleneck."""
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    pct = (
-        (lambda c: F.percentile(c, F.lit(0.5)))
-        if exact
-        else (lambda c: F.approx_percentile(c, F.lit(0.5), F.lit(10_000)))
-    )
+    _check_args(group_cols=group_cols, k=k)
     counts = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n_rows")).persist()
-    med = counts.agg(pct(F.col("n_rows")).alias("med_n"))
-    with_med = counts.crossJoin(F.broadcast(med))
-    mad = with_med.agg(
-        pct(F.abs(F.col("n_rows") - F.col("med_n"))).alias("mad_n")
+    out = _mad_flag(
+        counts, "n_rows", k, _median if exact else _approx_median,
+        ("med_n", "mad_n", "is_anomaly"),
     )
-    out = with_med.crossJoin(F.broadcast(mad)).withColumn(
-        "is_anomaly",
-        F.abs(F.col("n_rows") - F.col("med_n")) > F.lit(float(k)) * F.col("mad_n"),
-    )
-    out = out.persist()
-    out.count()  # group-cardinality rows; materialize, then free the counts
-    counts.unpersist()
-    return out
+    return _materialized(out, counts)
 
 
 def snapshot_diff(
@@ -352,53 +485,37 @@ def sequence_regressions(
         )
     if split_every is not None and split_every < 2:
         raise ValueError(f"split_every must be >= 2, got {split_every}")
-    tol_us = min_regression_sec * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = _event_us(ts_col)
 
-    def _regs(frame: DataFrame, extra_part: list[str]) -> DataFrame:
-        w = Window.partitionBy(scope_col, *extra_part).orderBy(seq_col)
-        prev = F.lag(us).over(w)
+    def _regs(frame: DataFrame, part: list[str], order, seq, first, last) -> DataFrame:
+        # adjacent (last, first) pairs per scope (+ part) in ``order``
+        w = Window.partitionBy(scope_col, *part).orderBy(order)
         return (
             frame.select(
                 F.col(scope_col),
-                F.col(seq_col),
-                us.alias("ts_us"),
-                prev.alias("prev_ts_us"),
+                seq.alias(seq_col),
+                first.alias("ts_us"),
+                F.lag(last).over(w).alias("prev_ts_us"),
             )
-            .filter(
-                F.col("prev_ts_us").isNotNull()
-                & ((F.col("prev_ts_us") - F.col("ts_us")) > tol_us)
-            )
-            .withColumn(
-                "regression_us", F.col("prev_ts_us") - F.col("ts_us")
-            )
+            .withColumn("regression_us", F.col("prev_ts_us") - F.col("ts_us"))
+            .filter(F.col("regression_us") > min_regression_sec * 1_000_000)
         )
 
     if split_every is None:
-        return _regs(df, [])
+        return _regs(df, [], seq_col, F.col(seq_col), us, us)
 
     bucketed = df.withColumn(
         "__split", F.floor(F.col(seq_col) / F.lit(split_every))
     )
-    within = _regs(bucketed, ["__split"])
+    within = _regs(bucketed, ["__split"], seq_col, F.col(seq_col), us, us)
     summary = bucketed.groupBy(scope_col, "__split").agg(
         F.min(seq_col).alias("__first_seq"),
         F.min_by(us, F.col(seq_col)).alias("__first_us"),
         F.max_by(us, F.col(seq_col)).alias("__last_us"),
     )
-    wu = Window.partitionBy(scope_col).orderBy("__split")
-    boundary = (
-        summary.select(
-            F.col(scope_col),
-            F.col("__first_seq").alias(seq_col),
-            F.col("__first_us").alias("ts_us"),
-            F.lag("__last_us").over(wu).alias("prev_ts_us"),
-        )
-        .filter(
-            F.col("prev_ts_us").isNotNull()
-            & ((F.col("prev_ts_us") - F.col("ts_us")) > tol_us)
-        )
-        .withColumn("regression_us", F.col("prev_ts_us") - F.col("ts_us"))
+    boundary = _regs(
+        summary, [], "__split", F.col("__first_seq"),
+        F.col("__first_us"), F.col("__last_us"),
     )
     return within.unionByName(boundary)
 
@@ -495,42 +612,15 @@ def completeness(
     group-cardinality rows, never on the data. No window, no join, no
     driver data; at 10^12 rows this is the same single-exchange shape as
     ``volume_anomaly`` with a wider (but still fixed-width) agg buffer."""
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
     if columns is None:
         columns = [c for c in df.columns if c not in set(group_cols)]
-    if not columns:
-        raise ValueError("no columns to check")
-    overlap = set(columns) & set(group_cols)
-    if overlap:
-        raise ValueError(f"columns overlap group_cols: {sorted(overlap)}")
-    if not 0.0 <= max_null_frac < 1.0:
-        raise ValueError(f"max_null_frac must be in [0, 1), got {max_null_frac}")
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.count(F.col(c)).alias(f"__nn_{i}") for i, c in enumerate(columns)
-    ]
-    g = df.groupBy(*group_cols).agg(*aggs)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                (F.col("__n") - F.col(f"__nn_{i}")).alias("n_null"),
-            )
-            for i, c in enumerate(columns)
-        ]
+    _check_args(
+        group_cols=group_cols, columns=columns, no_columns="no columns to check",
+        max_null_frac=max_null_frac,
     )
-    return (
-        g.select(*group_cols, F.col("__n").alias("n_rows"), F.explode(pairs).alias("__p"))
-        .select(
-            *group_cols,
-            F.col("__p.column").alias("column"),
-            F.col("n_rows"),
-            F.col("__p.n_null").alias("n_null"),
-        )
-        .withColumn("null_frac", F.col("n_null") / F.col("n_rows"))
-        .withColumn(
-            "is_incomplete", F.col("null_frac") > F.lit(float(max_null_frac))
-        )
+    g = df.groupBy(*group_cols).agg(*_quality_aggs(columns))
+    return _null_verdicts(_pivot(g, group_cols, columns), max_null_frac).drop(
+        "n_nonnull"
     )
 
 
@@ -565,64 +655,13 @@ def distinctness(
     keeps a fixed-width buffer per (group, column) and NO Expand — the
     same exact-vs-sketch dial as ``volume_anomaly``'s percentile and
     ``stats.profile``'s HLL."""
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
-    if not columns:
-        raise ValueError("columns must name at least one column")
-    overlap = set(columns) & set(group_cols)
-    if overlap:
-        raise ValueError(f"columns overlap group_cols: {sorted(overlap)}")
-    if not 0.0 <= min_distinct_frac <= 1.0:
-        raise ValueError(
-            f"min_distinct_frac must be in [0, 1], got {min_distinct_frac}"
-        )
-    cnt = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact
-        else (lambda c: F.approx_count_distinct(c, rsd))
+    _check_args(
+        group_cols=group_cols, columns=columns, min_distinct_frac=min_distinct_frac
     )
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(columns):
-        aggs.append(F.count(F.col(c)).alias(f"__nn_{i}"))
-        aggs.append(cnt(c).alias(f"__nd_{i}"))
-    g = df.groupBy(*group_cols).agg(*aggs)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"__nn_{i}").alias("n_nonnull"),
-                F.col(f"__nd_{i}").alias("n_distinct"),
-            )
-            for i, c in enumerate(columns)
-        ]
+    g = df.groupBy(*group_cols).agg(
+        *_quality_aggs(columns, _distinct_counter(exact, rsd))
     )
-    return (
-        g.select(*group_cols, F.col("__n").alias("n_rows"), F.explode(pairs).alias("__p"))
-        .select(
-            *group_cols,
-            F.col("__p.column").alias("column"),
-            F.col("n_rows"),
-            F.col("__p.n_nonnull").alias("n_nonnull"),
-            F.col("__p.n_distinct").alias("n_distinct"),
-        )
-        .withColumn(
-            "distinct_frac",
-            F.when(
-                F.col("n_nonnull") > 0, F.col("n_distinct") / F.col("n_nonnull")
-            ),
-        )
-        .withColumn(
-            "is_constant",
-            (F.col("n_nonnull") > 0) & (F.col("n_distinct") <= 1),
-        )
-        .withColumn(
-            "is_low_cardinality",
-            F.coalesce(
-                F.col("distinct_frac") < F.lit(float(min_distinct_frac)),
-                F.lit(False),
-            ),
-        )
-    )
+    return _distinct_verdicts(_pivot(g, group_cols, columns), min_distinct_frac)
 
 
 def quality_report(
@@ -674,114 +713,25 @@ def quality_report(
     Reference analog: one traversal validating every constraint kind at
     once (validators/schema.py iter_errors walks the document ONCE for
     facets, identities and occurrence), re-expressed over partitions."""
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
-    if not columns:
-        raise ValueError("columns must name at least one column")
-    overlap = set(columns) & set(group_cols)
-    if overlap:
-        raise ValueError(f"columns overlap group_cols: {sorted(overlap)}")
-    if not 0.0 <= max_null_frac < 1.0:
-        raise ValueError(f"max_null_frac must be in [0, 1), got {max_null_frac}")
-    if not 0.0 <= min_distinct_frac <= 1.0:
-        raise ValueError(
-            f"min_distinct_frac must be in [0, 1], got {min_distinct_frac}"
-        )
-    freshness_on = ts_col is not None
-    if freshness_on and (now is None or max_age_sec is None):
-        raise ValueError("ts_col requires explicit now and max_age_sec")
-    if max_age_sec is not None and max_age_sec <= 0:
-        raise ValueError(f"max_age_sec must be > 0, got {max_age_sec}")
-    if volume_k is not None and volume_k <= 0:
-        raise ValueError(f"volume_k must be > 0, got {volume_k}")
-
-    cnt = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact
-        else (lambda c: F.approx_count_distinct(c, rsd))
+    _check_args(
+        group_cols=group_cols, columns=columns, max_null_frac=max_null_frac,
+        min_distinct_frac=min_distinct_frac, ts_col=ts_col, now=now,
+        max_age_sec=max_age_sec, volume_k=volume_k,
     )
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(columns):
-        aggs.append(F.count(F.col(c)).alias(f"__nn_{i}"))
-        aggs.append(cnt(c).alias(f"__nd_{i}"))
-    if freshness_on:
-        aggs.append(
-            F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("__last_us")
-        )
-    g = df.groupBy(*group_cols).agg(*aggs)
-
-    if volume_k is not None:
-        g = g.persist()
-        pct = lambda c: F.percentile(c, F.lit(0.5))  # noqa: E731
-        med = g.agg(pct(F.col("__n")).alias("__med_n"))
-        with_med = g.crossJoin(F.broadcast(med))
-        mad = with_med.agg(pct(F.abs(F.col("__n") - F.col("__med_n"))).alias("__mad_n"))
-        g2 = with_med.crossJoin(F.broadcast(mad)).withColumn(
-            "is_volume_anomaly",
-            F.abs(F.col("__n") - F.col("__med_n"))
-            > F.lit(float(volume_k)) * F.col("__mad_n"),
-        )
-    else:
-        g2 = g
-
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"__nn_{i}").alias("n_nonnull"),
-                F.col(f"__nd_{i}").alias("n_distinct"),
-            )
-            for i, c in enumerate(columns)
-        ]
+    last = [] if ts_col is None else [F.max(_event_us(ts_col)).alias("__last_us")]
+    g = df.groupBy(*group_cols).agg(
+        *_quality_aggs(columns, _distinct_counter(exact, rsd), last)
     )
-    group_level = []
-    if freshness_on:
-        now_us = F.unix_micros(F.lit(now).cast("timestamp"))
-        group_level += [
-            (now_us - F.col("__last_us")).alias("age_us"),
-            ((now_us - F.col("__last_us")) > int(max_age_sec) * 1_000_000).alias(
-                "is_stale"
-            ),
-        ]
+    carry = [] if ts_col is None else _age(F.col("__last_us"), now, max_age_sec)
+    flagged = g
     if volume_k is not None:
-        group_level.append(F.col("is_volume_anomaly"))
-
-    out = (
-        g2.select(
-            *group_cols,
-            F.col("__n").alias("n_rows"),
-            *group_level,
-            F.explode(pairs).alias("__p"),
+        flagged = _mad_flag(
+            g.persist(), "__n", volume_k, _median,
+            ("__med_n", "__mad_n", "is_volume_anomaly"),
         )
-        .select(
-            *group_cols,
-            F.col("__p.column").alias("column"),
-            F.col("n_rows"),
-            F.col("__p.n_nonnull").alias("n_nonnull"),
-            F.col("__p.n_distinct").alias("n_distinct"),
-            *[F.col(c) for c in ("age_us", "is_stale") if freshness_on],
-            *(["is_volume_anomaly"] if volume_k is not None else []),
-        )
-        .withColumn("n_null", F.col("n_rows") - F.col("n_nonnull"))
-        .withColumn("null_frac", F.col("n_null") / F.col("n_rows"))
-        .withColumn("is_incomplete", F.col("null_frac") > F.lit(float(max_null_frac)))
-        .withColumn(
-            "distinct_frac",
-            F.when(F.col("n_nonnull") > 0, F.col("n_distinct") / F.col("n_nonnull")),
-        )
-        .withColumn(
-            "is_constant", (F.col("n_nonnull") > 0) & (F.col("n_distinct") <= 1)
-        )
-        .withColumn(
-            "is_low_cardinality",
-            F.coalesce(
-                F.col("distinct_frac") < F.lit(float(min_distinct_frac)),
-                F.lit(False),
-            ),
-        )
+        carry.append(F.col("is_volume_anomaly"))
+    out = _distinct_verdicts(
+        _null_verdicts(_pivot(flagged, group_cols, columns, carry), max_null_frac),
+        min_distinct_frac,
     )
-    if volume_k is not None:
-        out = out.persist()
-        out.count()  # (groups x columns) rows; materialize, free the agg cache
-        g.unpersist()
-    return out
+    return out if volume_k is None else _materialized(out, g)

@@ -9,7 +9,11 @@ projections AFTER the agg (group-cardinality, closed-window rows only —
 never the stream). State per window is a fixed-width buffer of
 len(columns)+1 longs, dropped once the watermark passes the window end,
 so a 10^12-event stream holds state proportional to open windows, not
-history.
+history. The aggregation list, the pivot and the null / distinct
+verdicts are the batch column-quality core in ``operators/checks.py``
+(``_quality_aggs``, ``_pivot``, ``_null_verdicts``,
+``_distinct_verdicts``), keyed here by the window bounds instead of
+group columns; its NULL / NaN conventions hold here too.
 
 Verdicts against EXPLICIT pinned expectations (``max_null_frac``,
 ``min_rows``) rather than the batch operator's median±MAD: a robust
@@ -27,6 +31,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from xmlschema_spark.operators.checks import (
+    _check_args,
+    _distinct_counter,
+    _distinct_verdicts,
+    _null_verdicts,
+    _pivot,
+    _quality_aggs,
+)
 
 
 def quality_monitor_stream(
@@ -57,69 +70,25 @@ def quality_monitor_stream(
     estimator). Adds ``n_distinct`` and ``is_constant`` (n_distinct <= 1
     on a window with non-null rows — the dead-upstream-join symptom,
     live per window)."""
-    if not columns:
-        raise ValueError("columns must name at least one column")
-    if not 0.0 <= max_null_frac < 1.0:
-        raise ValueError(f"max_null_frac must be in [0, 1), got {max_null_frac}")
+    _check_args(columns=columns, max_null_frac=max_null_frac)
     if min_rows < 0:
         raise ValueError(f"min_rows must be >= 0, got {min_rows}")
     if distinct_rsd is not None and not 0.0 < distinct_rsd < 1.0:
         raise ValueError(f"distinct_rsd must be in (0, 1), got {distinct_rsd}")
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.count(F.col(c)).alias(f"__nn_{i}") for i, c in enumerate(columns)
-    ]
-    if distinct_rsd is not None:
-        aggs += [
-            F.approx_count_distinct(c, distinct_rsd).alias(f"__nd_{i}")
-            for i, c in enumerate(columns)
-        ]
+    distinct = None if distinct_rsd is None else _distinct_counter(False, distinct_rsd)
     agg = (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("__w"))
-        .agg(*aggs)
+        .agg(*_quality_aggs(columns, distinct))
     )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                (F.col("__n") - F.col(f"__nn_{i}")).alias("n_null"),
-                *(
-                    [F.col(f"__nd_{i}").alias("n_distinct")]
-                    if distinct_rsd is not None
-                    else []
-                ),
-            )
-            for i, c in enumerate(columns)
-        ]
+    bounds = [F.col("__w.start").alias("window_start"), F.col("__w.end").alias("window_end")]
+    out = _null_verdicts(_pivot(agg, bounds, columns), max_null_frac)
+    nd = [] if distinct is None else ["n_distinct"]
+    if nd:
+        out = _distinct_verdicts(out, 0.0)
+    return out.select(
+        "window_start", "window_end", "column", "n_rows", "n_null", *nd,
+        "null_frac", "is_incomplete",
+        (F.col("n_rows") < F.lit(int(min_rows))).alias("is_low_volume"),
+        *(["is_constant"] if nd else []),
     )
-    out = (
-        agg.select(
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
-            F.col("__n").alias("n_rows"),
-            F.explode(pairs).alias("__p"),
-        )
-        .select(
-            "window_start",
-            "window_end",
-            F.col("__p.column").alias("column"),
-            "n_rows",
-            F.col("__p.n_null").alias("n_null"),
-            *(
-                [F.col("__p.n_distinct").alias("n_distinct")]
-                if distinct_rsd is not None
-                else []
-            ),
-        )
-        .withColumn("null_frac", F.col("n_null") / F.col("n_rows"))
-        .withColumn(
-            "is_incomplete", F.col("null_frac") > F.lit(float(max_null_frac))
-        )
-        .withColumn("is_low_volume", F.col("n_rows") < F.lit(int(min_rows)))
-    )
-    if distinct_rsd is not None:
-        out = out.withColumn(
-            "is_constant",
-            (F.col("n_rows") > F.col("n_null")) & (F.col("n_distinct") <= 1),
-        )
-    return out
