@@ -260,6 +260,43 @@ def test_session_stats_split_path(spark):
     assert len(rows) == 1 and rows[0].n_events == 2 and rows[0].duration_sec == 900
 
 
+def test_sessionize_malformed_event_time_reads_as_null(spark):
+    # a string event time that does not parse is a NULL event time, not a
+    # CAST_INVALID_INPUT abort; events are ordered by the parsed value
+    rows = [
+        (1, "2024-01-01 23:50:00", 1),
+        (1, "2024-01-02 00:05:00", 2),
+        (1, "{}", 3),
+        (1, "2024-01-02 01:00:00", 4),
+        (2, "2024-01-01 12:00:00", 5),
+    ]
+
+    def frame(bad):
+        return spark.createDataFrame(
+            [(u, bad if ts == "{}" else ts, e) for u, ts, e in rows],
+            "user_id long, ts string, event_id long",
+        )
+
+    bad, null = frame("not a time"), frame(None)
+    for split_by in (None, "day"):
+        def sessions(df):
+            return sorted(
+                (r.event_id, r.session_idx)
+                for r in cur.sessionize(df, "user_id", "ts", 1800, "event_id", split_by).collect()
+            )
+
+        def stats(df):
+            return sorted(
+                cur.session_stats(df, "user_id", "ts", 1800, "event_id", split_by).collect()
+            )
+
+        assert sessions(bad) == sessions(null), split_by
+        assert stats(bad) == stats(null), split_by
+    got = {r.event_id: r.session_idx for r in cur.sessionize(bad, "user_id", "ts", 1800, "event_id").collect()}
+    # the unparsable event sorts first, as a NULL does, and starts its own session
+    assert got == {3: 1, 1: 2, 2: 2, 4: 3, 5: 1}
+
+
 def test_token_budget_reserved_columns_raise(spark):
     df = spark.createDataFrame(
         [(1, "a b c", "en", 3)], "doc_id long, text string, lang string, n_tokens int"

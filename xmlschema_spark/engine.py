@@ -9,7 +9,7 @@ walks a document once for every constraint kind):
    decode and phash rules, a ``bad`` predicate, the violation reason and
    the column whose value a violation reports. Row checks read the input
    row; decode and phash checks read the output of the one
-   ``decode_check`` pandas-UDF wiring;
+   ``decode_check`` wiring (an Arrow ``mapInArrow`` UDF);
 2. every consumer reads that list:
    - violation detail rows: one explode over the failing checks of each
      input row (row rules) or decoded row (decode / phash rules);
@@ -33,6 +33,7 @@ triple collapsed to PASS/FAIL per partition (xsdbase.py:62-92).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass
 from typing import Callable, NamedTuple
 
@@ -76,6 +77,18 @@ class _Check(NamedTuple):
     reason: str | Callable[[], Column]
 
 
+class _OnePassPlan(NamedTuple):
+    """:meth:`ValidationEngine.validate_one_pass`'s Columns for one input
+    schema and stats column list: all of the plan but its DataFrame and
+    its ``run_id`` literal."""
+
+    pre: list[Column] | None  # decode_check's input projection; None: no decode
+    passthrough: list[str] | None  # the columns carried through decode_check
+    group: Column  # the partition_id grouping key
+    aggs: list[Column]
+    out: list[Column]  # the verdict and stat projection after ``run_id``
+
+
 def _decode_reason() -> Column:
     return F.concat_ws(
         "; ",
@@ -86,10 +99,10 @@ def _decode_reason() -> Column:
     )
 
 
-def _error_total(checks: list[_Check], count: Callable[[_Check], Column]) -> Column:
-    """``count(check)`` summed over the error-severity checks: the one
-    FAIL count every verdict reads (warnings never fail a partition)."""
-    errors = [count(c) for c in checks if c.rule.severity == "error"]
+def _error_total(counts: Iterable[tuple[_Check, Column]]) -> Column:
+    """The (check, count) counts of the error-severity checks summed: the
+    one FAIL count every verdict reads (warnings never fail a partition)."""
+    errors = [n for c, n in counts if c.rule.severity == "error"]
     return sum(errors) if errors else F.lit(0)
 
 
@@ -145,12 +158,12 @@ def _exploded(
     )
 
 
-def _verdict_rows(
-    df: DataFrame, run_id: str, n_viol: Column, n_rows: Column, metrics: Column,
-    attempted: str, *extra: Column,
-) -> DataFrame:
-    """The one verdict projection over per-partition counts: PASS/FAIL and
-    the PSVI ``validation_attempted`` / ``validity`` (xsdbase.py:62-92).
+def _verdict_cols(
+    n_viol: Column, n_rows: Column, metrics: Column, attempted: str, *extra: Column,
+) -> list[Column]:
+    """The one verdict projection over per-partition counts, after its
+    leading ``run_id`` literal: PASS/FAIL and the PSVI
+    ``validation_attempted`` / ``validity`` (xsdbase.py:62-92).
 
     skip mode is attempted='none' → validity='notKnown' (NOT a clean
     PASS), strict mode that stopped at the first hit is 'partial', and an
@@ -167,9 +180,8 @@ def _verdict_rows(
             .when(n_rows == 0, F.lit("notKnown"))
             .otherwise(F.lit("valid"))
         )
-    return df.select(
-        F.lit(run_id).alias("run_id"),
-        "partition_id",
+    return [
+        F.col("partition_id"),
         F.when(n_viol > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status"),
         n_rows.alias("rows_checked"),
         n_viol.cast("long").alias("violation_count"),
@@ -177,7 +189,7 @@ def _verdict_rows(
         F.lit(attempted).alias("validation_attempted"),
         validity.alias("validity"),
         *extra,
-    )
+    ]
 
 
 @dataclass
@@ -237,10 +249,11 @@ class ValidationEngine:
         if ph:
             bad = F.col("decode_ok") & ~F.col("phash_match")
             self._checks.append(_Check(ph, bad, "phash", None, "stored phash != phash of decoded pixels"))
+        self._one_pass_plans: dict[tuple, _OnePassPlan] = {}
 
     def _row_errors(self) -> Column:
         """Per input row: how many error-severity row checks fail."""
-        return _error_total(self._checks[: self._n_row], lambda c: c.bad.cast("long"))
+        return _error_total((c, c.bad.cast("long")) for c in self._checks[: self._n_row])
 
     # ------------------------------------------------------------------ row
 
@@ -458,12 +471,27 @@ class ValidationEngine:
         keyref — inherently their own shuffles) remain on ``validate()``;
         verdict semantics here match it exactly (tested).
 
-        STRING columns' ``__min``/``__max`` stats are order-preserving
-        7-byte UTF-8 prefixes (exact prefixes of the true min/max): exact
-        full-string min/max needs a variable-width aggregation buffer,
-        which would demote this entire one-pass aggregation from a
-        streaming HashAggregate to a full-sort SortAggregate. Exact string
-        min/max lives in :func:`operators.stats.profile`.
+        Plan cache: every Column of the plan is built once per engine and
+        key — the input schema (``df.schema``), the stats column list
+        (which ``with_stats`` and ``stats_columns`` decide) and
+        ``distinct_rsd`` — and kept on the engine. Every call, the first
+        included, then binds the cached Columns to ``df``: one select,
+        ``decode_check``'s ``mapInArrow``, one aggregation and the verdict
+        projection with ``run_id`` as its one literal. Every PySpark
+        Column operation is at least one JVM round trip (several with the
+        DataFrame query-context capture on), so rebuilding the Columns on
+        every call cost the default image rule set 9,000-10,000 round
+        trips; a cached plan binds in about 360.
+
+        The verdict's columns are the verdict fields, then four
+        ``<column>__{nulls,min,max,distinct}`` per stats column; the
+        ``metrics`` map is keyed by rule id. STRING columns'
+        ``__min``/``__max`` stats are order-preserving 7-byte UTF-8
+        prefixes (exact prefixes of the true min/max): exact full-string
+        min/max needs a variable-width aggregation buffer, which would
+        demote this entire one-pass aggregation from a streaming
+        HashAggregate to a full-sort SortAggregate. Exact string min/max
+        lives in :func:`operators.stats.profile`.
         """
         stats_src = (
             stats_columns or [
@@ -471,7 +499,32 @@ class ValidationEngine:
                 if f.name not in (self.partition_col, "bytes")
             ]
         ) if with_stats else []
+        key = (df.schema, tuple(stats_src), distinct_rsd)
+        plan = self._one_pass_plans.get(key)
+        if plan is None:  # two threads that miss at once both build it: harmless
+            plan = self._one_pass_plans[key] = self._one_pass_plan(
+                df.schema, stats_src, distinct_rsd
+            )
         src = df
+        if plan.pre is not None:
+            src = mm_ops.decode_check(
+                df.select(*plan.pre), id_col=self.id_col,
+                passthrough=plan.passthrough, **self._decode_args,
+            )
+            if self.id_col != "image_id":
+                src = src.withColumnRenamed("image_id", self.id_col)
+        return src.groupBy(plan.group).agg(*plan.aggs).select(
+            F.lit(run_id).alias("run_id"), *plan.out
+        )
+
+    def _one_pass_plan(
+        self, schema: T.StructType, stats_src: list[str], distinct_rsd: float
+    ) -> _OnePassPlan:
+        """Every Column :meth:`validate_one_pass` derives for one key."""
+        def is_str(c: str) -> bool:
+            return isinstance(schema[c].dataType, T.StringType)
+
+        pre = passthrough = None
         decode_str_stats: dict[str, tuple[str, str, str]] = {}
         if self._decode_args is not None:
             # Evaluate every ROW-rule predicate JVM-side BEFORE the Arrow
@@ -487,99 +540,84 @@ class ValidationEngine:
             # anyway, so approx_count_distinct over the hash estimates the
             # same cardinality).
             flag_cols = [f"__v{i}" for i in range(self._n_row)]
-            flag_exprs = [
-                c.bad.cast("int").alias(fc)
-                for fc, c in zip(flag_cols, self._checks[: self._n_row])
-            ]
-            derived_exprs: list = []
-            for i, c in enumerate(
-                c for c in stats_src
-                if c != self.id_col
-                and isinstance(df.schema[c].dataType, T.StringType)
-            ):
+            derived = {
+                fc: c.bad.cast("int") for fc, c in zip(flag_cols, self._checks[: self._n_row])
+            }
+            for i, c in enumerate(c for c in stats_src if c != self.id_col and is_str(c)):
                 names = (f"__st{i}_null", f"__st{i}_ord", f"__st{i}_hash")
-                derived_exprs += [
-                    F.col(c).isNull().cast("int").alias(names[0]),
-                    stats_ops._string_prefix_ordinal(F.col(c)).alias(names[1]),
-                    F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))).alias(names[2]),
-                ]
+                derived.update(zip(names, [
+                    F.col(c).isNull().cast("int"),
+                    stats_ops._string_prefix_ordinal(F.col(c)),
+                    F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))),
+                ]))
                 decode_str_stats[c] = names
-            pre = df.select("*", *flag_exprs, *derived_exprs)
             passthrough = [self.partition_col] + flag_cols + [
                 c for c in stats_src
                 if c != self.id_col and c not in decode_str_stats
             ] + [n for names in decode_str_stats.values() for n in names]
-            src = mm_ops.decode_check(
-                pre, id_col=self.id_col, passthrough=passthrough, **self._decode_args
-            )
-            if self.id_col != "image_id":
-                src = src.withColumnRenamed("image_id", self.id_col)
+            # exactly decode_check's input columns, so that it reads the
+            # projection as is instead of selecting each column by name
+            pre = [
+                derived[n].alias(n) if n in derived else F.col(n)
+                for n in mm_ops._decode_inputs(
+                    self.id_col, self._decode_args["check_phash"], passthrough
+                )
+            ]
             counts = [F.col(fc).cast("long") for fc in flag_cols]
             counts += [c.bad.cast("long") for c in self._checks[self._n_row:]]
         else:
             counts = [c.bad.cast("long") for c in self._checks]
-        flags = [F.sum(n).alias(c.rule.rule_id) for n, c in zip(counts, self._checks)]
+        # rule sums under internal aliases: a rule id can neither collide
+        # with a stat output nor leak into the verdict's columns
+        sums = [f"__r{i}" for i in range(len(self._checks))]
+        aggs = [F.count(F.lit(1)).alias("rows_checked")]
+        aggs += [F.sum(n).alias(s) for n, s in zip(counts, sums)]
 
-        stat_aggs: list = []
-        str_ord_cols: list[str] = []
+        stat_out: list[Column] = []
+        stats = ("nulls", "min", "max", "distinct")
         for c in stats_src:
+            names = [f"{c}__{s}" for s in stats]
             if c in decode_str_stats:
                 # stats inputs were materialized JVM-side before the
                 # Arrow UDF (fixed-width passthrough — see above)
-                n_null, n_ord, n_hash = decode_str_stats[c]
-                str_ord_cols.append(c)
-                stat_aggs += [
-                    F.sum(F.col(n_null).cast("long")).alias(f"{c}__nulls"),
-                    F.min(F.col(n_ord)).alias(f"{c}__min"),
-                    F.max(F.col(n_ord)).alias(f"{c}__max"),
-                    F.approx_count_distinct(n_hash, distinct_rsd).alias(f"{c}__distinct"),
-                ]
-            elif isinstance(df.schema[c].dataType, T.StringType):
+                n_null, n_ord, n_hash = map(F.col, decode_str_stats[c])
+                exprs = [F.sum(n_null.cast("long")), F.min(n_ord), F.max(n_ord),
+                         F.approx_count_distinct(n_hash, distinct_rsd)]
+            elif is_str(c):
                 # min/max over a STRING buffer would force the WHOLE
                 # one-pass aggregation into SortAggregate (a full sort
                 # of the decode output — ruinous at 10^12 rows); the
                 # order-preserving prefix ordinal keeps it a streaming
                 # HashAggregate. Exact full-string min/max lives in
                 # stats.profile (its own agg, DuckDB-oracle-checked).
-                str_ord_cols.append(c)
                 ordinal = stats_ops._string_prefix_ordinal(F.col(c))
-                stat_aggs += [
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-                    F.min(ordinal).alias(f"{c}__min"),
-                    F.max(ordinal).alias(f"{c}__max"),
-                    F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
-                ]
+                exprs = [F.sum(F.col(c).isNull().cast("long")), F.min(ordinal),
+                         F.max(ordinal), F.approx_count_distinct(c, distinct_rsd)]
             else:
-                stat_aggs += [
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-                    F.min(F.col(c)).cast("string").alias(f"{c}__min"),
-                    F.max(F.col(c)).cast("string").alias(f"{c}__max"),
-                    F.approx_count_distinct(c, distinct_rsd).alias(f"{c}__distinct"),
-                ]
-
-        wide = src.groupBy(
-            F.col(self.partition_col).cast("string").alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows_checked"), *flags, *stat_aggs)
-
-        rule_ids = [c.rule.rule_id for c in self._checks]
-        metrics = F.map_from_arrays(
-            F.array(*[F.lit(r) for r in rule_ids]),
-            F.array(*[F.col(r).cast("string") for r in rule_ids]),
-        ) if rule_ids else F.create_map()
-        def _stat_out(a: str):
+                exprs = [F.sum(F.col(c).isNull().cast("long")),
+                         F.min(F.col(c)).cast("string"), F.max(F.col(c)).cast("string"),
+                         F.approx_count_distinct(c, distinct_rsd)]
+            aggs += [e.alias(n) for e, n in zip(exprs, names)]
             # decode string-prefix ordinals back to readable prefixes
             # (trailing zero-pad bytes stripped) after the aggregation
-            base = a.rsplit("__", 1)
-            if len(base) == 2 and base[1] in ("min", "max") and base[0] in str_ord_cols:
-                return stats_ops._string_prefix_decode(F.col(a)).alias(a)
-            return F.col(a)
+            stat_out += [
+                stats_ops._string_prefix_decode(F.col(n)).alias(n)
+                if is_str(c) and s in ("min", "max") else F.col(n)
+                for n, s in zip(names, stats)
+            ]
 
-        return _verdict_rows(
-            wide, run_id,
-            _error_total(self._checks, lambda c: F.col(c.rule.rule_id)),
-            F.col("rows_checked"), metrics, "full",
-            *[_stat_out(a) for a in
-              [f.name for f in wide.schema.fields if "__" in f.name]],
+        metrics = F.map_from_arrays(
+            F.array(*[F.lit(c.rule.rule_id) for c in self._checks]),
+            F.array(*[F.col(s).cast("string") for s in sums]),
+        ) if sums else F.create_map()
+        return _OnePassPlan(
+            pre, passthrough,
+            F.col(self.partition_col).cast("string").alias("partition_id"),
+            aggs,
+            _verdict_cols(
+                _error_total(zip(self._checks, map(F.col, sums))),
+                F.col("rows_checked"), metrics, "full", *stat_out,
+            ),
         )
 
     def _verdicts(
@@ -600,13 +638,15 @@ class ValidationEngine:
             F.count(F.lit(1)).alias("violation_count"),
             F.count_distinct("rule_id").alias("rules_failed"),
         )
-        return _verdict_rows(
-            rows.join(vcounts, "partition_id", "full"), run_id,
-            F.coalesce("violation_count", F.lit(0)),
-            F.coalesce("rows_checked", F.lit(0)),
-            F.create_map(
-                F.lit("rules_failed"),
-                F.coalesce("rules_failed", F.lit(0)).cast("string"),
+        return rows.join(vcounts, "partition_id", "full").select(
+            F.lit(run_id).alias("run_id"),
+            *_verdict_cols(
+                F.coalesce("violation_count", F.lit(0)),
+                F.coalesce("rows_checked", F.lit(0)),
+                F.create_map(
+                    F.lit("rules_failed"),
+                    F.coalesce("rules_failed", F.lit(0)).cast("string"),
+                ),
+                attempted,
             ),
-            attempted,
         )

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xmlschema_spark.operators.checks import _event_us
 from xmlschema_spark.operators.dedup import normalize_text, shingles
 from xmlschema_spark.operators.text import tokens
 
@@ -292,17 +293,18 @@ def sessionize(
     boundary-straddling fixtures, tests/test_curation.py)."""
     if split_by is not None:
         return _sessionize_split(df, user_col, ts_col, gap_sec, tiebreak_col, split_by)
-    order = [F.col(ts_col)]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col))
-    w = Window.partitionBy(user_col).orderBy(*order)
     # microsecond-exact gap arithmetic: second-floored timestamps
     # (unix_timestamp) mis-place events whose true gap straddles the
     # threshold by < 1 s, and different engines round vs floor — exact
-    # integer µs removes the ambiguity entirely. The cast lifts
+    # integer µs removes the ambiguity entirely. ``_event_us`` lifts
     # TIMESTAMP_NTZ (how pandas-written parquet reads) to TIMESTAMP under
-    # the session tz (UTC) — a no-op for TIMESTAMP columns.
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    # the session tz (UTC) and reads an event time that does not parse as
+    # NULL; events are ordered by that parsed value, not the raw column.
+    us = _event_us(ts_col)
+    order = [us]
+    if tiebreak_col:
+        order.append(F.col(tiebreak_col))
+    w = Window.partitionBy(user_col).orderBy(*order)
     prev = F.lag(us).over(w)
     new_s = F.when(prev.isNull() | ((us - prev) > gap_sec * 1_000_000), 1).otherwise(0)
     return df.withColumn(
@@ -341,15 +343,15 @@ def _sessionize_split(
     join against the summary (thin; Spark broadcasts it when it fits).
     """
     gap_us = gap_sec * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    order = [F.col(ts_col)]
+    us = _event_us(ts_col)
+    order = [us]
     if tiebreak_col:
         order.append(F.col(tiebreak_col))
     w = Window.partitionBy(user_col, "__split").orderBy(*order)
     prev = F.lag(us).over(w)
     new_s = F.when(prev.isNull() | ((us - prev) > gap_us), 1).otherwise(0)
     local = df.withColumn(
-        "__split", F.date_trunc(split_by, F.col(ts_col).cast("timestamp"))
+        "__split", F.date_trunc(split_by, F.timestamp_micros(us))
     ).withColumn(
         "__local_idx",
         F.sum(new_s).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
@@ -403,13 +405,11 @@ def session_stats(
     ``user_col`` (no second full exchange under AQE). ``split_by``
     selects sessionize's hot-user scale path; the rollup is identical."""
     s = sessionize(df, user_col, ts_col, gap_sec, tiebreak_col, split_by)
-    dur_us = F.unix_micros(F.max(ts_col).cast("timestamp")) - F.unix_micros(
-        F.min(ts_col).cast("timestamp")
-    )
+    us = _event_us(ts_col)
     return s.groupBy(user_col, "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.floor(dur_us / 1_000_000).alias("duration_sec"),
+        F.date_format(F.timestamp_micros(F.min(us)), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+        F.floor((F.max(us) - F.min(us)) / 1_000_000).alias("duration_sec"),
     )
 
 

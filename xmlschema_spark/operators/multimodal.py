@@ -7,10 +7,14 @@ applied to opaque image payloads, per BASELINE.json's per-row invariant:
 decoded-pixel consistency (PSNR ≥ 40 dB for lossy formats) + metadata
 agreement.
 
-Execution model: ``mapInPandas`` over Arrow batches — each batch is a
-pandas DataFrame of (image_id, bytes, w, h, fmt, phash); the UDF body
-decodes with the numpy codec and emits one verdict row per input row.
-Batch size is capped via ``spark.sql.execution.arrow.maxRecordsPerBatch``
+Execution model: ``decode_check`` is a ``mapInArrow`` over Arrow
+RecordBatches of (image_id, bytes, w, h, fmt, phash) plus any passthrough
+columns; the UDF body reads each payload as a zero-copy view of the
+``bytes`` column's data buffer, decodes with the numpy codec and emits one
+verdict row per input row as a RecordBatch (passthrough columns copied
+zero-copy). The transforms (resize, feature and frame extraction, audio
+features) are ``mapInPandas`` over pandas batches of (id, bytes). Batch
+size is capped via ``spark.sql.execution.arrow.maxRecordsPerBatch``
 (session.py) because ``bytes`` is MB-scale at production; the scan reads
 ONLY the needed columns (column pruning keeps this pass cheap relative to
 the full row-rule pass).
@@ -46,6 +50,12 @@ DECODE_CHECK_SCHEMA = (
 )
 
 
+def _decode_inputs(id_col: str, check_phash: bool, passthrough: list[str]) -> list[str]:
+    """The columns :func:`decode_check` reads, in the order it reads them."""
+    cols = [id_col, "bytes", "w", "h", "fmt"] + (["phash"] if check_phash else [])
+    return cols + [c for c in passthrough if c not in cols]
+
+
 def decode_check(
     df: DataFrame,
     psnr_db: float = 40.0,
@@ -73,8 +83,7 @@ def decode_check(
     joining them back afterwards costs a broadcast + join per run.
     """
     passthrough = [c for c in (passthrough or []) if c != id_col]
-    cols = [id_col, "bytes", "w", "h", "fmt"] + (["phash"] if check_phash else [])
-    cols += [c for c in passthrough if c not in cols]
+    cols = _decode_inputs(id_col, check_phash, passthrough)
 
     def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -174,11 +183,13 @@ def decode_check(
                 out_names.append(c)
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    schema_src = df.select(*cols).schema
+    # a frame that is already exactly ``cols`` is read as is: selecting a
+    # column by name costs several JVM round trips
+    src = df if df.columns == cols else df.select(*cols)
     schema = DECODE_CHECK_SCHEMA + "".join(
-        f", {c} {schema_src[c].dataType.simpleString()}" for c in passthrough
+        f", {c} {src.schema[c].dataType.simpleString()}" for c in passthrough
     )
-    return df.select(*cols).mapInArrow(batches, schema=schema)
+    return src.mapInArrow(batches, schema=schema)
 
 
 HEADER_LEN = 12  # magic(4s) + w(u32 LE) + h(u32 LE), functions/codec.py
@@ -559,8 +570,8 @@ def extract_features(df: DataFrame, id_col: str = "image_id") -> DataFrame:
     """Per-image feature extraction over Arrow batches: mean RGB, luma
     mean/std, an 8-bin luma histogram (array<double>, L1-normalized), and
     aspect ratio. The feature-extract stage of a training-data pipeline —
-    same pruned-scan + mapInPandas shape as decode_check, numpy-vectorized
-    per image, no per-row Python in the driver path."""
+    the same pruned scan as decode_check, over mapInPandas batches,
+    numpy-vectorized per image, no per-row Python in the driver path."""
     schema = (
         f"{id_col} string, mean_r double, mean_g double, mean_b double, "
         "luma_mean double, luma_std double, luma_hist array<double>, "
