@@ -76,7 +76,7 @@ def test_collapse_is_xml_whitespace_only(spark):
     df = spark.createDataFrame(
         [("a \t\n\r b",), ("a\fb",), ("a\x0bb",)], "s string"
     )
-    got = [r.c for r in df.select(whitespace_normalize(F.col("s"), "collapse").alias("c")).collect()]
+    got = [r.c for r in df.select(F.expr(whitespace_normalize("s", "collapse")).alias("c")).collect()]
     assert got == ["a b", "a\fb", "a\x0bb"]
 
 

@@ -10,7 +10,7 @@ tested at parquet small scale.
 Architecture (Spark-first, not a port):
 
 - ``rules``      — the rule table (the analog of an XSD document).
-- ``compiler``   — rule → Spark ``Column`` predicate (the analog of
+- ``compiler``   — rule → Spark SQL predicate text (the analog of
                    ``XsdSimpleType.validators``; one wide projection).
 - ``engine``     — ``validate()``: scan → wide rule pass → violations +
                    per-partition verdicts, strict/lax/skip modes.

@@ -17,10 +17,15 @@ gives the same replace semantics, so both formats share one design):
 - state table: one JSON line per (run_id, partition_id) with status,
   metrics, lineage (input fingerprint + ruleset hash).
 - ``run()`` processes PENDING partitions in batches; each batch is ONE
-  Spark job over ``df.filter(part ∈ batch)`` (NOT a per-partition loop —
-  resume = anti-join of pending partitions, SURVEY.md §2.8), writing
-  violations/verdicts with partitionOverwriteMode=dynamic so a re-run of
-  a half-written batch simply replaces those partitions (idempotent).
+  ``validate()`` over ``df.filter(part ∈ batch)`` (NOT a per-partition
+  loop — resume = anti-join of pending partitions, SURVEY.md §2.8),
+  writing violations/verdicts with partitionOverwriteMode=dynamic so a
+  re-run of a half-written batch simply replaces those partitions
+  (idempotent). A batch still runs several Spark jobs: each sink write
+  is one, and a drift rule collects its bounds and histogram first.
+  perfbench's checkpoint_resume pass (a run interrupted after its first
+  batch, its resume and ``finish()``, 8 partitions in batches of 4) runs
+  35 jobs.
 - table-scoped rules (global uniqueness) run once in a final step gated
   by their own state row, since they cannot be computed per-batch.
 """
@@ -156,8 +161,10 @@ class CheckpointedRun:
         fail_after_batches: int | None = None,
         with_stats: bool = False,
     ) -> None:
-        """Process all pending partitions. ``fail_after_batches`` exists for
-        the kill-and-resume test (FIXTURES.md `resume_midrun`).
+        """Process all pending partitions, one ``validate()`` and its sink
+        writes per batch (several Spark jobs, not one — see the module
+        docstring). ``fail_after_batches`` exists for the kill-and-resume
+        test (FIXTURES.md `resume_midrun`).
 
         Every state row carries observed batch metrics
         (``batch_violations`` / ``batch_errors`` / ``batch_rows_checked``

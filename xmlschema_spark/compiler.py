@@ -1,4 +1,5 @@
-"""Rule compiler: each row-level rule → one Spark SQL boolean ``Column``.
+"""Rule compiler: each row-level rule → one Spark SQL boolean expression,
+as text.
 
 This is the engine's analog of the reference's per-type validator lists
 (``XsdSimpleType.validators`` collected at
@@ -6,18 +7,30 @@ This is the engine's analog of the reference's per-type validator lists
 value at :330-342) — except compiled ONCE into a single wide projection
 that Catalyst fuses into one whole-stage-codegen pass over the scan.
 
+Every built-in kind compiles to SQL text: parameters become the typed
+literals ``F.lit`` would make (:func:`_lit`), column names go through one
+quoting helper (:func:`_q`), ``each=True`` becomes ``forall(arr, __e -> …)``
+and a gate wraps the text. The engine splices the texts of a whole rule
+set into one ``selectExpr`` per output, so its plans cost a few JVM round
+trips instead of several per ``Column`` operation.
+
+Two lanes stay ``Column``s, because they run Python or user code: the
+pattern fallback (:func:`_pattern_fallback_udf`, a pandas UDF for XSD
+patterns Java regex cannot express) and the kinds added with
+``register_rule_kind`` (``lang_expected``, the container-header families).
+
 Null semantics follow XSD: facets constrain the *value space*, so a NULL
 passes every facet except ``not_null`` (presence is an occurrence
 constraint, xsdbase.py:783-784, not a facet). Gated rules (the
 type-alternatives/CTA analog, elements.py:778-792) only fire where the
 gate predicate holds.
-
-Everything here is JVM-side Catalyst expressions — no Python UDFs. The
-pandas-UDF rule kinds (decode_image, phash_consistency) live in
-``operators/multimodal.py``.
 """
 
 from __future__ import annotations
+
+import datetime
+import decimal
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,6 +43,14 @@ from xmlschema_spark.functions.xsd_regex import (
     xsd_patterns_to_python,
 )
 from xmlschema_spark.rules import CUSTOM_ROW_KINDS, Rule, RuleCompileError
+
+# the XML whitespace set tab/LF/CR/space, as a regex
+_XML_WS = "[\\t\\n\\r ]+"
+# the length and range facets: each compares one value with params.value
+_COMPARE = {
+    "length": "=", "min_length": ">=", "max_length": "<=",
+    "min": ">=", "max": "<=", "min_exclusive": ">", "max_exclusive": "<",
+}
 
 
 def _pattern_fallback_udf(patterns: list[str]):
@@ -44,45 +65,113 @@ def _pattern_fallback_udf(patterns: list[str]):
     )
 
 
-def whitespace_normalize(col: Column, mode: str) -> Column:
-    """XSD whiteSpace facet normalization (facets.py:96-129):
-    ``replace`` maps tab/LF/CR to space; ``collapse`` additionally folds
-    runs and trims; ``preserve`` is identity."""
+def _q(name: str) -> str:
+    """A column name as SQL text, read the way ``F.col`` reads it: dots
+    split struct-field paths, a backtick-quoted part keeps its dots, and
+    a doubled backtick inside one is a literal backtick."""
+    parts, cur, quoted, i = [], "", False, 0
+    while i < len(name):
+        ch = name[i]
+        if quoted and ch == "`" and name[i + 1 : i + 2] == "`":
+            cur, i = cur + "`", i + 1
+        elif ch == "`" and (quoted or not cur):
+            quoted = not quoted
+        elif ch == "." and not quoted:
+            parts, cur = parts + [cur], ""
+        else:
+            cur += ch
+        i += 1
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts + [cur])
+
+
+def _lit(v) -> str:
+    """A Python value as the SQL literal ``F.lit`` would make of it. A
+    string with a quote or backslash goes in as its UTF-8 bytes, so its
+    value does not depend on ``spark.sql.parser.escapedStringLiterals``."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{v!r}D"
+    if isinstance(v, decimal.Decimal):
+        return f"{v}BD"
+    if isinstance(v, datetime.datetime):  # a naive one is local time, as for F.lit
+        return f"TIMESTAMP '{v.astimezone().isoformat()}'"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, datetime.timedelta):
+        us = v // datetime.timedelta(microseconds=1)
+        d, us_ = divmod(abs(us), 86_400_000_000)
+        s = datetime.timedelta(microseconds=us_)
+        return f"INTERVAL '{'-' if us < 0 else ''}{d} {s}' DAY TO SECOND"
+    if isinstance(v, str):
+        if "'" in v or "\\" in v:
+            return f"CAST(X'{v.encode().hex()}' AS STRING)"
+        return f"'{v}'"
+    raise RuleCompileError(f"no SQL literal for {v!r}")
+
+
+def whitespace_normalize(v: str, mode: str) -> str:
+    """XSD whiteSpace facet normalization (facets.py:96-129) of the SQL
+    expression ``v``: ``replace`` maps tab/LF/CR to space; ``collapse``
+    additionally folds runs and trims; ``preserve`` is identity."""
     if mode == "preserve":
-        return col
+        return v
     if mode == "replace":
-        return F.translate(col, "\t\n\r", "   ")
+        return f"translate({v}, '\t\n\r', '   ')"
     if mode == "collapse":
         # exactly the XML whitespace set tab/LF/CR/space (facets.py:96-129)
         # — NOT \s, which would also fold \f and \v the spec preserves
-        return F.trim(F.regexp_replace(col, "[\\t\\n\\r ]+", " "))
+        return f"trim(regexp_replace({v}, {_lit(_XML_WS)}, ' '))"
     raise RuleCompileError(f"bad whiteSpace mode {mode!r}")
 
 
-def _passes_when_null(col: Column, ok: Column) -> Column:
+def _passes_when_null(c: str, ok: str) -> str:
     """Facet semantics: NULL is not a facet violation."""
-    return col.isNull() | ok
+    return f"({c} IS NULL OR {ok})"
 
 
-def _np(ok: Column) -> Column:
+def _np(ok: str) -> str:
     """Single-reference form of the NULL-passes facet semantics, for
     predicates that PROPAGATE null from the value column (comparisons,
-    rlike/regexp chains, isin over non-null lists, length/size):
+    rlike/regexp chains, IN over non-null lists, length/size):
     the predicate is NULL exactly when the value is NULL, so
-    ``coalesce(pred, TRUE)`` == ``col.isNull() | pred`` while referencing
+    ``coalesce(pred, true)`` == ``c IS NULL OR pred`` while referencing
     the value expression ONCE instead of twice. That matters when the
     rule column is a COMPUTED expression (a parsed interval, a nested
     extraction): Catalyst evaluates it per reference — conditional
     branches defeat both CollapseProject's reuse guard and codegen
     subexpression elimination (measured 2x on a duration-parse rule) —
     so halving references halves the dominant cost. Kinds whose
-    predicate is non-null for a NULL value (try_cast.isNotNull forms,
+    predicate is non-null for a NULL value (try_cast IS NOT NULL forms,
     UDF lanes) keep :func:`_passes_when_null`."""
-    return F.coalesce(ok, F.lit(True))
+    return f"coalesce({ok}, true)"
+
+
+def _holds(sql: str) -> str:
+    """A user's SQL condition (an assertion, a gate) holds: NULL counts as
+    false. The newlines end a trailing ``--`` comment in ``sql``."""
+    return f"coalesce(CAST((\n{sql}\n) AS BOOLEAN), false)"
 
 
 def compile_row_rule(rule: Rule) -> Column:
-    """Return a boolean Column: True ⇔ the row SATISFIES the rule.
+    """Return a boolean Column: True ⇔ the row SATISFIES the rule — the
+    SQL text of :func:`_row_ok` parsed, or its Column lane."""
+    ok = _row_ok(rule)
+    return F.expr(ok) if isinstance(ok, str) else ok
+
+
+def _row_ok(rule: Rule) -> str | Column:
+    """The rule's predicate — True ⇔ the row SATISFIES it — as SQL text,
+    or as a Column for the UDF lanes (the pattern fallback and
+    registered kinds).
 
     Nested data (SURVEY §1.2 — the reference maps complex types to
     ``StructType`` / ``ArrayType(StructType)``, converters.py:264-288):
@@ -105,61 +194,45 @@ def compile_row_rule(rule: Rule) -> Column:
                 f"{rule.rule_id}: {rule.kind} does not support each=True "
                 "(row-scoped expression, not an element facet)"
             )
-        arr = F.col(rule.column)
+        arr = _q(rule.column)
         field = rule.param("field")
-
-        def elem_value(x):
-            if not field:
-                return x
-            v = x
-            for part in str(field).split("."):
-                v = v[part]
-            return v
-
+        elem = "__e" + ("." + _q(str(field)) if field else "")
         # pandas-UDF lanes can't run inside a higher-order function —
         # _scalar_ok(allow_udf=False) raises at compile time instead of
         # failing at plan time
-        ok = _passes_when_null(
-            arr, F.forall(arr, lambda x: _scalar_ok(rule, elem_value(x), allow_udf=False))
-        )
+        elem_ok = _scalar_ok(rule, elem, allow_udf=False)
+        ok = _passes_when_null(arr, f"forall({arr}, __e -> {elem_ok})")
     else:
-        ok = _scalar_ok(rule, F.col(rule.column) if rule.column else None)
+        ok = _scalar_ok(rule, _q(rule.column) if rule.column else None)
 
     if rule.gate:
         # CTA analog: rows outside the gate trivially satisfy the rule.
-        ok = ~F.coalesce(F.expr(rule.gate).cast("boolean"), F.lit(False)) | ok
+        if isinstance(ok, str):
+            return f"(NOT {_holds(rule.gate)} OR {ok})"
+        return F.expr(f"NOT {_holds(rule.gate)}") | ok
     return ok
 
 
-def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
-    """The per-value predicate for one rule kind over value column ``c``
-    (a top-level column, a struct field path, or a ``forall`` lambda
-    variable when called from the ``each`` lane)."""
+def _scalar_ok(rule: Rule, c: str, allow_udf: bool = True) -> str | Column:
+    """The per-value predicate for one rule kind over the SQL expression
+    ``c`` (a top-level column, a struct field path, or the ``forall``
+    lambda variable when called from the ``each`` lane)."""
     k = rule.kind
 
     if k == "not_null":
-        ok = c.isNotNull()
+        ok = f"({c} IS NOT NULL)"
     elif k == "type":
         # lexical-space cast check, analog of to_python decoders
         # (builtins.py:219-247): cast failure ⇒ type violation.
         target = rule.param("type")
         if not target:
             raise RuleCompileError(f"{rule.rule_id}: type rule needs params.type")
-        ok = _passes_when_null(c, c.try_cast(target).isNotNull())
-    elif k == "length":
-        ok = _np(F.length(c) == int(rule.param("value")))
-    elif k == "min_length":
-        ok = _np(F.length(c) >= int(rule.param("value")))
-    elif k == "max_length":
-        ok = _np(F.length(c) <= int(rule.param("value")))
-    elif k == "min":
-        ok = _np(c >= F.lit(rule.param("value")))
-    elif k == "max":
-        ok = _np(c <= F.lit(rule.param("value")))
-    elif k == "min_exclusive":
-        ok = _np(c > F.lit(rule.param("value")))
-    elif k == "max_exclusive":
-        ok = _np(c < F.lit(rule.param("value")))
+        ok = _passes_when_null(c, f"try_cast({c} AS {target}) IS NOT NULL")
+    elif k in _COMPARE:
+        if k.endswith("length"):
+            ok = _np(f"(length({c}) {_COMPARE[k]} {int(rule.param('value'))})")
+        else:
+            ok = _np(f"({c} {_COMPARE[k]} {_lit(rule.param('value'))})")
     elif k == "total_digits":
         # Reference formula (facets.py:421-423):
         #   len([d for d in str(x).strip('0') if d.isdigit()])
@@ -169,24 +242,22 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
         # -> 2 digits (the interior zero survives because stripping stops
         # at the '.' and the '1'), whereas stripping [-.] first would
         # wrongly give '1' -> 1 digit.
-        s = c.cast("string")
-        stripped = F.regexp_replace(F.regexp_replace(s, "0+$", ""), "^0+", "")
-        sig = F.regexp_replace(stripped, "[^0-9]", "")
-        ok = _np(F.length(sig) <= int(rule.param("value")))
+        stripped = f"regexp_replace(regexp_replace(CAST({c} AS STRING), '0+$', ''), '^0+', '')"
+        sig = f"regexp_replace({stripped}, '[^0-9]', '')"
+        ok = _np(f"(length({sig}) <= {int(rule.param('value'))})")
     elif k == "fraction_digits":
-        s = c.cast("string")
-        frac = F.when(
-            s.contains("."),
-            F.length(F.regexp_replace(F.substring_index(s, ".", -1), "0+$", "")),
-        ).otherwise(F.lit(0))
-        ok = _np(frac <= int(rule.param("value")))
+        s = f"CAST({c} AS STRING)"
+        frac = (
+            f"CASE WHEN contains({s}, '.') THEN length(regexp_replace("
+            f"substring_index({s}, '.', -1), '0+$', '')) ELSE 0 END"
+        )
+        ok = _np(f"({frac} <= {int(rule.param('value'))})")
     elif k == "pattern":
         patterns = rule.param("patterns") or [rule.param("pattern")]
         if not patterns or patterns[0] is None:
             raise RuleCompileError(f"{rule.rule_id}: pattern rule needs params.patterns")
         try:
-            java_re = xsd_patterns_to_java(list(patterns))
-            ok = _np(c.rlike(java_re))
+            ok = _np(f"rlike({c}, {_lit(xsd_patterns_to_java(list(patterns)))})")
         except XsdRegexError:
             if not allow_udf:
                 raise RuleCompileError(
@@ -200,29 +271,27 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
             # codegen and route the remainder through an Arrow-batched
             # pandas UDF on Python's re — SURVEY §4 fallback, now wired
             # in rather than advised in an error message).
-            ok = _passes_when_null(c, _pattern_fallback_udf(list(patterns))(c))
+            ok = F.expr(f"{c} IS NULL") | _pattern_fallback_udf(list(patterns))(F.expr(c))
     elif k == "enumeration":
-        values = rule.param("values")
+        # a NULL member would make IN NULL for every non-member, and
+        # NULL is not a facet violation anyway: only the others count
+        values = [v for v in rule.param("values") or [] if v is not None]
         if not values:
             raise RuleCompileError(f"{rule.rule_id}: enumeration needs params.values")
-        if any(v is None for v in values):
-            ok = _passes_when_null(c, c.isin(*values))
-        else:
-            ok = _np(c.isin(*values))
+        ok = _np(f"({c} IN ({', '.join(map(_lit, values))}))")
     elif k == "fixed":
-        ok = _np(c == F.lit(rule.param("value")))
+        ok = _np(f"({c} = {_lit(rule.param('value'))})")
     elif k == "occurs":
-        lo = int(rule.param("min", 0))
         hi = rule.param("max")
-        ok = F.size(c) >= lo if hi is None else F.size(c).between(lo, int(hi))
-        ok = _np(ok)
+        ok = f"size({c}) >= {int(rule.param('min', 0))}"
+        ok = _np(f"({ok})" if hi is None else f"({ok} AND size({c}) <= {int(hi)})")
     elif k == "assertion_sql":
         sql = rule.param("sql")
         if not sql:
             raise RuleCompileError(f"{rule.rule_id}: assertion_sql needs params.sql")
         # XsdAssert semantics (assertions.py:69-72): non-true ⇒ violation,
         # so a NULL assertion result fails (coalesce to false).
-        ok = F.coalesce(F.expr(sql).cast("boolean"), F.lit(False))
+        ok = _holds(sql)
     elif k == "type_union":
         # XsdUnion analog (simple_types.py:887-898): value is valid iff it
         # decodes as at least one member type — first-match-wins cascade
@@ -230,61 +299,49 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
         types = rule.param("types")
         if not types:
             raise RuleCompileError(f"{rule.rule_id}: type_union needs params.types")
-        any_ok = None
-        for t in types:
-            cast_ok = c.try_cast(t).isNotNull()
-            any_ok = cast_ok if any_ok is None else (any_ok | cast_ok)
-        ok = _passes_when_null(c, any_ok)
+        any_ok = " OR ".join(f"try_cast({c} AS {t}) IS NOT NULL" for t in types)
+        ok = _passes_when_null(c, f"({any_ok})")
     elif k == "list_items":
         # XsdList analog (simple_types.py:726-732): whitespace-separated
         # items, each valid against the item type/pattern; forall keeps it
         # one codegen expression.
-        delimiter = rule.param("delimiter", "[\\t\\n\\r ]+")
-        items = F.filter(
-            F.split(c, delimiter), lambda x: F.length(x) > 0
-        )
-        item_type = rule.param("item_type")
-        item_pattern = rule.param("item_pattern")
+        delimiter = rule.param("delimiter", _XML_WS)
+        items = f"filter(split({c}, {_lit(delimiter)}, -1), __i -> length(__i) > 0)"
         checks = []
-        if item_type:
-            checks.append(lambda x: x.try_cast(item_type).isNotNull())
-        if item_pattern:
-            java_re = xsd_patterns_to_java([item_pattern])
-            checks.append(lambda x: x.rlike(java_re))
+        if rule.param("item_type"):
+            checks.append(f"try_cast(__i AS {rule.param('item_type')}) IS NOT NULL")
+        if rule.param("item_pattern"):
+            item_re = xsd_patterns_to_java([rule.param("item_pattern")])
+            checks.append(f"rlike(__i, {_lit(item_re)})")
         if not checks:
             raise RuleCompileError(
                 f"{rule.rule_id}: list_items needs item_type and/or item_pattern"
             )
-        item_ok = lambda x: checks[0](x) if len(checks) == 1 else (checks[0](x) & checks[1](x))  # noqa: E731
-        all_ok = F.forall(items, item_ok)
-        lo = rule.param("min_items")
-        hi = rule.param("max_items")
-        if lo is not None:
-            all_ok = all_ok & (F.size(items) >= int(lo))
-        if hi is not None:
-            all_ok = all_ok & (F.size(items) <= int(hi))
-        ok = _passes_when_null(c, all_ok)
+        all_ok = [f"forall({items}, __i -> {' AND '.join(checks)})"]
+        for p, op in (("min_items", ">="), ("max_items", "<=")):
+            if rule.param(p) is not None:
+                all_ok.append(f"size({items}) {op} {int(rule.param(p))}")
+        ok = _passes_when_null(c, f"({' AND '.join(all_ok)})")
     elif k == "finite":
         # finite_number_validator analog (builtins.py:66-71): not NaN/Inf
-        ok = _np(~F.isnan(c) & ~c.isin(float("inf"), float("-inf")))
+        ok = _np(f"(NOT isnan({c}) AND NOT ({c} IN ({_lit(math.inf)}, {_lit(-math.inf)})))")
     elif k == "whitespace":
         # the whiteSpace facet as a *check*: the stored value must already
         # be in normalized form (normalization itself lives in normalize.py)
-        mode = rule.param("mode", "collapse")
-        ok = _np(c == whitespace_normalize(c, mode))
+        ok = _np(f"({c} = {whitespace_normalize(c, rule.param('mode', 'collapse'))})")
     elif k == "explicit_timezone":
         # XSD 1.1 explicitTimezone facet (facets.py:458-487): the
         # reference checks tzinfo on the DECODED datetime; we check the
         # lexical form — XSD timezones are exactly 'Z' or (+|-)hh:mm
         # at the end of the dateTime/time/date lexical space.
         value = rule.param("value", "optional")
-        has_tz = c.rlike("(Z|[+-][0-9]{2}:[0-9]{2})$")
+        has_tz = f"rlike({c}, '(Z|[+-][0-9]{{2}}:[0-9]{{2}})$')"
         if value == "required":
             ok = _np(has_tz)
         elif value == "prohibited":
-            ok = _np(~has_tz)
+            ok = _np(f"(NOT {has_tz})")
         elif value == "optional":
-            ok = F.lit(True)
+            ok = "true"
         else:
             raise RuleCompileError(
                 f"{rule.rule_id}: explicit_timezone value must be one of "
@@ -295,24 +352,19 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
         # builtins.py:160-166): exactly {'true','1','false','0'} after
         # whiteSpace collapse — narrower than Spark's boolean cast,
         # which also accepts 'yes'/'no'/'t'/'f' etc.
-        v = whitespace_normalize(c, "collapse")
-        ok = _np(v.isin("true", "false", "1", "0"))
+        ok = _np(f"({whitespace_normalize(c, 'collapse')} IN ('true', 'false', '1', '0'))")
     elif k == "hex_binary":
         # even-length hex lexical space (hex_binary_validator,
         # builtins.py:139-141)
-        ok = _np(c.rlike("^([0-9a-fA-F]{2})*$"))
+        ok = _np(f"rlike({c}, '^([0-9a-fA-F]{{2}})*$')")
     elif k == "base64_binary":
         # charset + strict-decodability (base64_binary_validator,
         # builtins.py:144-155): the reference strips whitespace then
         # b64decodes strictly; the equivalent lexical check is canonical
         # alphabet, 4-char groups, and valid '='-padding — one codegen
         # regex instead of a decode attempt.
-        v = F.regexp_replace(c, "[\\t\\n\\r ]+", "")
-        ok = _np(
-            v.rlike(
-                "^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
-            )
-        )
+        b64 = "'^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$'"
+        ok = _np(f"rlike(regexp_replace({c}, {_lit(_XML_WS)}, ''), {b64})")
     elif k == "duration":
         # xs:duration / dayTimeDuration / yearMonthDuration lexical space
         # (builtins.py:243-248,507-518); value-space comparison happens on
@@ -326,7 +378,7 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
                 f"{rule.rule_id}: duration variant must be one of "
                 f"{sorted(DURATION_VARIANTS)}"
             )
-        ok = _np(c.rlike(f"^{DURATION_VARIANTS[variant]}$"))
+        ok = _np(f"rlike({c}, {_lit(f'^{DURATION_VARIANTS[variant]}$')})")
     elif k == "qname":
         # xs:QName lexical check (qname_validator, builtins.py:74-76):
         # NCName(':'NCName)? — NCName = name chars minus ':', using the
@@ -334,7 +386,7 @@ def _scalar_ok(rule: Rule, c: Column, allow_udf: bool = True) -> Column:
         # (xsd_regex.py — same BMP ranges as the reference regex.py:38-45,
         # so Greek/Cyrillic/CJK names are accepted).
         ncname = f"[{NCNAME_START_INNER}][{NCNAME_CHAR_INNER}]*"
-        ok = _np(c.rlike(f"^(?:{ncname}:)?{ncname}$"))
+        ok = _np(f"rlike({c}, {_lit(f'^(?:{ncname}:)?{ncname}$')})")
     elif k in CUSTOM_ROW_KINDS:
         compile_fn, _ = CUSTOM_ROW_KINDS[k]
         ok = compile_fn(rule)

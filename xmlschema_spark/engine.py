@@ -7,9 +7,13 @@ walks a document once for every constraint kind):
 1. the constructor compiles the rule set once (the analog of
    XsdGlobals.build) into ONE check list: for each row rule, and for the
    decode and phash rules, a ``bad`` predicate, the violation reason and
-   the column whose value a violation reports. Row checks read the input
-   row; decode and phash checks read the output of the one
-   ``decode_check`` wiring (an Arrow ``mapInArrow`` UDF);
+   the value a violation reports, all as Spark SQL text (a ``bad``
+   predicate is a ``Column`` only for the compiler's UDF lanes), so the
+   constructor makes no JVM call. Row checks read the input row; decode
+   and phash checks read the output of the one ``decode_check`` wiring
+   (an Arrow ``mapInArrow`` UDF). Every consumer splices the texts into
+   one ``selectExpr`` or a few ``F.expr`` calls, so a plan costs a few
+   dozen py4j round trips, not several per rule;
 2. every consumer reads that list:
    - violation detail rows: one explode over the failing checks of each
      input row (row rules) or decoded row (decode / phash rules);
@@ -35,13 +39,13 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 from dataclasses import dataclass
-from typing import Callable, NamedTuple
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xmlschema_spark.compiler import compile_row_rule, violation_reason
+from xmlschema_spark.compiler import _lit, _q, _row_ok, violation_reason
 from xmlschema_spark.operators import drift as drift_ops
 from xmlschema_spark.operators import identity as id_ops
 from xmlschema_spark.operators import multimodal as mm_ops
@@ -66,15 +70,14 @@ VIOLATION_SCHEMA = T.StructType(
 
 
 class _Check(NamedTuple):
-    """One compiled check: a violation wherever ``bad`` holds."""
+    """One compiled check: a violation wherever ``bad`` holds. ``value``
+    and ``reason`` are SQL text, and so is ``bad`` but for a UDF lane's."""
 
     rule: Rule
-    bad: Column
+    bad: str | Column
     column: str  # the violation row's ``column`` label
-    value: str | None  # the column whose value the violation row reports
-    # a Column-building reason is built only when detail rows are: the
-    # one-pass plan never reads it
-    reason: str | Callable[[], Column]
+    value: str  # the value the violation row reports
+    reason: str
 
 
 class _OnePassPlan(NamedTuple):
@@ -89,54 +92,48 @@ class _OnePassPlan(NamedTuple):
     out: list[Column]  # the verdict and stat projection after ``run_id``
 
 
-def _decode_reason() -> Column:
-    return F.concat_ws(
-        "; ",
-        F.when(~F.col("decode_ok"), F.concat(F.lit("decode failed: "), F.coalesce("error", F.lit("")))),
-        F.when(F.col("decode_ok") & ~F.col("fmt_match"), F.lit("container fmt != declared fmt")),
-        F.when(F.col("decode_ok") & ~F.col("dims_match"), F.lit("decoded dims != declared (w,h)")),
-        F.when(F.col("decode_ok") & ~F.col("psnr_ok"), F.concat(F.lit("psnr below threshold: "), F.round("psnr", 2).cast("string"))),
-    )
+_NULL = "CAST(NULL AS STRING)"
+_DECODE_REASON = (
+    "concat_ws('; ', "
+    "CASE WHEN NOT decode_ok THEN concat('decode failed: ', coalesce(`error`, '')) END, "
+    "CASE WHEN decode_ok AND NOT fmt_match THEN 'container fmt != declared fmt' END, "
+    "CASE WHEN decode_ok AND NOT dims_match THEN 'decoded dims != declared (w,h)' END, "
+    "CASE WHEN decode_ok AND NOT psnr_ok THEN "
+    "concat('psnr below threshold: ', CAST(round(psnr, 2) AS STRING)) END)"
+)
 
 
-def _error_total(counts: Iterable[tuple[_Check, Column]]) -> Column:
+def _cast(x: str | Column, to: str) -> Column:
+    return F.expr(f"CAST({x} AS {to})") if isinstance(x, str) else x.cast(to)
+
+
+def _error_total(counts: Iterable[tuple[_Check, str]]) -> str:
     """The (check, count) counts of the error-severity checks summed: the
     one FAIL count every verdict reads (warnings never fail a partition)."""
     errors = [n for c, n in counts if c.rule.severity == "error"]
-    return sum(errors) if errors else F.lit(0)
+    return f"({' + '.join(errors)})" if errors else "0"
 
 
-def _field(v) -> Column:
-    """A violation field: a Column as is, None as a NULL string, any
-    other Python value as a literal."""
-    if isinstance(v, Column):
-        return v
-    return F.lit(None).cast("string") if v is None else F.lit(v)
-
-
-def _violation_rows(df: DataFrame, **fields) -> DataFrame:
+def _violation_rows(df: DataFrame, **fields: str) -> DataFrame:
     """Project ``df`` onto VIOLATION_SCHEMA: the one place its eight fields
-    are assembled, each given as a Column or a Python value."""
-    return df.select(*[_field(fields[f.name]).alias(f.name) for f in VIOLATION_SCHEMA.fields])
+    are assembled, each given as SQL text."""
+    return df.selectExpr(*[f"{fields[f.name]} AS `{f.name}`" for f in VIOLATION_SCHEMA.fields])
 
 
 def _exploded(
-    df: DataFrame, run_id: str, checks: list[_Check], row_id: Column, partition_id: Column
+    df: DataFrame, run_id: str, checks: list[_Check], row_id: str, partition_id: str
 ) -> DataFrame:
     """One violation row per (row of ``df``, check whose ``bad`` holds)."""
-    structs = [
-        F.when(
-            c.bad,
-            F.struct(
-                F.lit(c.rule.rule_id).alias("rule_id"),
-                F.lit(c.column).alias("column"),
-                _field(F.col(c.value).cast("string") if c.value else None).alias("value"),
-                _field(c.reason if isinstance(c.reason, str) else c.reason()).alias("reason"),
-                F.lit(c.rule.severity).alias("severity"),
-            ),
+    structs = []
+    for c in checks:
+        v = (
+            f"named_struct('rule_id', {_lit(c.rule.rule_id)}, 'column', {_lit(c.column)}, "
+            f"'value', {c.value}, 'reason', {c.reason}, 'severity', {_lit(c.rule.severity)})"
         )
-        for c in checks
-    ]
+        if isinstance(c.bad, Column):
+            structs.append(F.when(c.bad, F.expr(v)))
+        else:
+            structs.append(f"CASE WHEN {c.bad} THEN {v} END")
     # Plan-shape rules learned the hard way (each measured ~2-6x wall
     # on a computed-column rule suite like the interval parse):
     # - no filter(size(__v) > 0) before the explode: explode (not
@@ -147,20 +144,21 @@ def _exploded(
     #   separate project of __v followed by explode("__v") keeps the
     #   Generate's child materializing the full struct array alongside
     #   the generator (measured 6x slower than the inline form).
-    exploded = df.select(
-        row_id.alias("row_id"),
-        partition_id.alias("partition_id"),
-        F.explode(F.array_compact(F.array(*structs))).alias("v"),
-    )
+    keys = [f"{row_id} AS row_id", f"{partition_id} AS partition_id"]
+    if all(isinstance(v, str) for v in structs):
+        exploded = df.selectExpr(*keys, f"explode(array_compact(array({', '.join(structs)}))) AS v")
+    else:  # a UDF lane's struct joins the same array
+        structs = [F.expr(v) if isinstance(v, str) else v for v in structs]
+        exploded = df.select(
+            *map(F.expr, keys), F.explode(F.array_compact(F.array(*structs))).alias("v")
+        )
     return _violation_rows(
-        exploded, run_id=run_id, partition_id=F.col("partition_id"), row_id=F.col("row_id"),
-        **{k: F.col(f"v.{k}") for k in ("rule_id", "column", "value", "reason", "severity")},
+        exploded, run_id=_lit(run_id), partition_id="partition_id", row_id="row_id",
+        **{k: f"v.`{k}`" for k in ("rule_id", "column", "value", "reason", "severity")},
     )
 
 
-def _verdict_cols(
-    n_viol: Column, n_rows: Column, metrics: Column, attempted: str, *extra: Column,
-) -> list[Column]:
+def _verdict_cols(n_viol: str, n_rows: str, metrics: str, attempted: str) -> list[str]:
     """The one verdict projection over per-partition counts, after its
     leading ``run_id`` literal: PASS/FAIL and the PSVI
     ``validation_attempted`` / ``validity`` (xsdbase.py:62-92).
@@ -169,26 +167,24 @@ def _verdict_cols(
     PASS), strict mode that stopped at the first hit is 'partial', and an
     empty scope with nothing checked is 'notKnown' rather than 'valid'."""
     if attempted == "none":
-        validity = F.lit("notKnown")
+        validity = "'notKnown'"
     elif attempted == "partial":
         # strict stopped at the first hit: partitions with no recorded
         # violation were not fully assessed — notKnown, not valid
-        validity = F.when(n_viol > 0, F.lit("invalid")).otherwise(F.lit("notKnown"))
+        validity = f"CASE WHEN {n_viol} > 0 THEN 'invalid' ELSE 'notKnown' END"
     else:
         validity = (
-            F.when(n_viol > 0, F.lit("invalid"))
-            .when(n_rows == 0, F.lit("notKnown"))
-            .otherwise(F.lit("valid"))
+            f"CASE WHEN {n_viol} > 0 THEN 'invalid' WHEN {n_rows} = 0 THEN 'notKnown' "
+            "ELSE 'valid' END"
         )
     return [
-        F.col("partition_id"),
-        F.when(n_viol > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status"),
-        n_rows.alias("rows_checked"),
-        n_viol.cast("long").alias("violation_count"),
-        metrics.alias("metrics"),
-        F.lit(attempted).alias("validation_attempted"),
-        validity.alias("validity"),
-        *extra,
+        "partition_id",
+        f"CASE WHEN {n_viol} > 0 THEN 'FAIL' ELSE 'PASS' END AS status",
+        f"{n_rows} AS rows_checked",
+        f"CAST({n_viol} AS BIGINT) AS violation_count",
+        f"{metrics} AS metrics",
+        f"'{attempted}' AS validation_attempted",
+        f"{validity} AS validity",
     ]
 
 
@@ -227,10 +223,14 @@ class ValidationEngine:
         # the compiled check list: the row checks, then the checks that
         # read decode_check's output (only the first decode and the first
         # phash rule count)
-        self._checks = [
-            _Check(r, ~compile_row_rule(r), r.column or "", r.column, violation_reason(r))
-            for r in ruleset.row_rules
-        ]
+        self._checks = []
+        for r in ruleset.row_rules:
+            ok = _row_ok(r)
+            self._checks.append(_Check(
+                r, f"NOT ({ok})" if isinstance(ok, str) else ~ok, r.column or "",
+                f"CAST({_q(r.column)} AS STRING)" if r.column else _NULL,
+                _lit(violation_reason(r)),
+            ))
         self._n_row = len(self._checks)
         dec, ph = (
             next((r for r in ruleset.dataset_rules if r.kind == k), None)
@@ -244,16 +244,21 @@ class ValidationEngine:
                 phash_max_hamming_lossy=int(ph.param("max_hamming_lossy", 20)) if ph else 20,
             )
         if dec:
-            bad = ~(F.col("decode_ok") & F.col("dims_match") & F.col("fmt_match") & F.col("psnr_ok"))
-            self._checks.append(_Check(dec, bad, "bytes", None, _decode_reason))
+            bad = "NOT (decode_ok AND dims_match AND fmt_match AND psnr_ok)"
+            self._checks.append(_Check(dec, bad, "bytes", _NULL, _DECODE_REASON))
         if ph:
-            bad = F.col("decode_ok") & ~F.col("phash_match")
-            self._checks.append(_Check(ph, bad, "phash", None, "stored phash != phash of decoded pixels"))
+            reason = _lit("stored phash != phash of decoded pixels")
+            self._checks.append(_Check(ph, "decode_ok AND NOT phash_match", "phash", _NULL, reason))
         self._one_pass_plans: dict[tuple, _OnePassPlan] = {}
 
     def _row_errors(self) -> Column:
         """Per input row: how many error-severity row checks fail."""
-        return _error_total((c, c.bad.cast("long")) for c in self._checks[: self._n_row])
+        checks = self._checks[: self._n_row]
+        total = F.expr(_error_total(
+            (c, f"CAST({c.bad} AS BIGINT)") for c in checks if isinstance(c.bad, str)
+        ))
+        lanes = [c.bad for c in checks if isinstance(c.bad, Column) and c.rule.severity == "error"]
+        return sum((bad.cast("long") for bad in lanes), total)
 
     # ------------------------------------------------------------------ row
 
@@ -263,8 +268,8 @@ class ValidationEngine:
             return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
         return _exploded(
             df, run_id, self._checks[: self._n_row],
-            row_id=F.col(self.id_col).cast("string"),
-            partition_id=F.col(self.partition_col).cast("string"),
+            row_id=f"CAST({_q(self.id_col)} AS STRING)",
+            partition_id=f"CAST({_q(self.partition_col)} AS STRING)",
         )
 
     # ------------------------------------------------------------------ set
@@ -278,29 +283,28 @@ class ValidationEngine:
         secondary = secondary or {}
         for r in self.ruleset.set_rules:
             cols = list(r.param("columns", []))
-            values = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
+            values = ", ".join(["'|'"] + [f"CAST({_q(c)} AS STRING)" for c in cols])
+            values = f"concat_ws({values})"
             scope = self.partition_col if r.scope == "partition" else None
+            rule = dict(run_id=_lit(run_id), rule_id=_lit(r.rule_id), severity=_lit(r.severity))
             if r.kind in ("unique", "key"):
                 dups = id_ops.duplicate_values(
                     df, cols, scope_col=scope,
                     salt_partitions=int(r.param("salt_partitions", 0)),
                 )
+                reason = _lit(f"duplicated value for {r.kind} constraint ({r.rule_id}): x")
                 out.append(_violation_rows(
-                    dups, run_id=run_id, rule_id=r.rule_id, severity=r.severity,
-                    partition_id=F.col(scope).cast("string") if scope else "__table__",
-                    row_id=values, column=",".join(cols), value=values,
-                    reason=F.concat(
-                        F.lit(f"duplicated value for {r.kind} constraint ({r.rule_id}): x"),
-                        F.col("dup_count").cast("string"),
-                    ),
+                    dups, **rule,
+                    partition_id=f"CAST({_q(scope)} AS STRING)" if scope else "'__table__'",
+                    row_id=values, column=_lit(",".join(cols)), value=values,
+                    reason=f"concat({reason}, CAST(dup_count AS STRING))",
                 ))
                 if r.kind == "key":
                     out.append(_violation_rows(
-                        id_ops.key_null_rows(df, cols, self.id_col),
-                        run_id=run_id, rule_id=r.rule_id, severity=r.severity,
-                        partition_id="__table__", row_id=F.col("row_id").cast("string"),
-                        column=F.concat_ws(",", "null_columns"), value=None,
-                        reason="missing key field (key fields are required)",
+                        id_ops.key_null_rows(df, cols, self.id_col), **rule,
+                        partition_id="'__table__'", row_id="CAST(row_id AS STRING)",
+                        column="concat_ws(',', null_columns)", value=_NULL,
+                        reason=_lit("missing key field (key fields are required)"),
                     ))
             elif r.kind in ("keyref", "idref"):
                 if r.kind == "idref":
@@ -321,10 +325,10 @@ class ValidationEngine:
                     broadcast_pk=r.param("broadcast_pk"),
                 )
                 out.append(_violation_rows(
-                    orphans, run_id=run_id, rule_id=r.rule_id, severity=r.severity,
-                    partition_id=F.col(self.partition_col).cast("string"),
-                    row_id=F.col(self.id_col).cast("string"), column=",".join(cols), value=values,
-                    reason=f"key not found in {ref_name} (keyref {r.rule_id})",
+                    orphans, **rule,
+                    partition_id=f"CAST({_q(self.partition_col)} AS STRING)",
+                    row_id=f"CAST({_q(self.id_col)} AS STRING)", column=_lit(",".join(cols)),
+                    value=values, reason=_lit(f"key not found in {ref_name} (keyref {r.rule_id})"),
                 ))
         return out
 
@@ -339,9 +343,8 @@ class ValidationEngine:
                 df, id_col=self.id_col, passthrough=[self.partition_col], **self._decode_args
             )
             out.append(_exploded(
-                decoded, run_id, self._checks[self._n_row:],
-                row_id=F.col("image_id"),
-                partition_id=F.coalesce(F.col(self.partition_col).cast("string"), F.lit("__table__")),
+                decoded, run_id, self._checks[self._n_row:], row_id="image_id",
+                partition_id=f"coalesce(CAST({_q(self.partition_col)} AS STRING), '__table__')",
             ))
         for r in self.ruleset.dataset_rules:
             if r.kind in ("drift_ks", "drift_psi"):
@@ -354,11 +357,11 @@ class ValidationEngine:
                     scores = drift_ops.ks(df, col, self.partition_col)
                     stat_col = "ks"
                 out.append(_violation_rows(
-                    scores.filter(F.col(stat_col) > threshold),
-                    run_id=run_id, rule_id=r.rule_id, severity=r.severity,
-                    partition_id=F.col(self.partition_col).cast("string"), row_id=None,
-                    column=col, value=F.round(F.col(stat_col), 6).cast("string"),
-                    reason=f"{stat_col} drift above {threshold} vs reference",
+                    scores.filter(f"{stat_col} > {_lit(threshold)}"),
+                    run_id=_lit(run_id), rule_id=_lit(r.rule_id), severity=_lit(r.severity),
+                    partition_id=f"CAST({_q(self.partition_col)} AS STRING)", row_id=_NULL,
+                    column=_lit(col), value=f"CAST(round({stat_col}, 6) AS STRING)",
+                    reason=_lit(f"{stat_col} drift above {threshold} vs reference"),
                 ))
         return out
 
@@ -541,7 +544,7 @@ class ValidationEngine:
             # same cardinality).
             flag_cols = [f"__v{i}" for i in range(self._n_row)]
             derived = {
-                fc: c.bad.cast("int") for fc, c in zip(flag_cols, self._checks[: self._n_row])
+                fc: _cast(c.bad, "int") for fc, c in zip(flag_cols, self._checks[: self._n_row])
             }
             for i, c in enumerate(c for c in stats_src if c != self.id_col and is_str(c)):
                 names = (f"__st{i}_null", f"__st{i}_ord", f"__st{i}_hash")
@@ -563,15 +566,14 @@ class ValidationEngine:
                     self.id_col, self._decode_args["check_phash"], passthrough
                 )
             ]
-            counts = [F.col(fc).cast("long") for fc in flag_cols]
-            counts += [c.bad.cast("long") for c in self._checks[self._n_row:]]
+            counts = flag_cols + [c.bad for c in self._checks[self._n_row:]]
         else:
-            counts = [c.bad.cast("long") for c in self._checks]
+            counts = [c.bad for c in self._checks]
         # rule sums under internal aliases: a rule id can neither collide
         # with a stat output nor leak into the verdict's columns
         sums = [f"__r{i}" for i in range(len(self._checks))]
-        aggs = [F.count(F.lit(1)).alias("rows_checked")]
-        aggs += [F.sum(n).alias(s) for n, s in zip(counts, sums)]
+        aggs = [F.expr("count(1) AS rows_checked")]
+        aggs += [F.sum(_cast(n, "bigint")).alias(s) for n, s in zip(counts, sums)]
 
         stat_out: list[Column] = []
         stats = ("nulls", "min", "max", "distinct")
@@ -606,18 +608,17 @@ class ValidationEngine:
                 for n, s in zip(names, stats)
             ]
 
-        metrics = F.map_from_arrays(
-            F.array(*[F.lit(c.rule.rule_id) for c in self._checks]),
-            F.array(*[F.col(s).cast("string") for s in sums]),
-        ) if sums else F.create_map()
+        metrics = (
+            f"map_from_arrays(array({', '.join(_lit(c.rule.rule_id) for c in self._checks)}), "
+            f"array({', '.join(f'CAST({s} AS STRING)' for s in sums)}))"
+        ) if sums else "map()"
         return _OnePassPlan(
             pre, passthrough,
-            F.col(self.partition_col).cast("string").alias("partition_id"),
+            F.expr(f"CAST({_q(self.partition_col)} AS STRING) AS partition_id"),
             aggs,
-            _verdict_cols(
-                _error_total(zip(self._checks, map(F.col, sums))),
-                F.col("rows_checked"), metrics, "full", *stat_out,
-            ),
+            [*map(F.expr, _verdict_cols(
+                _error_total(zip(self._checks, sums)), "rows_checked", metrics, "full",
+            )), *stat_out],
         )
 
     def _verdicts(
@@ -632,21 +633,15 @@ class ValidationEngine:
         come from the violation rows, because set- and drift-level
         violations have no row projection to sum."""
         rows = df.groupBy(
-            F.col(self.partition_col).cast("string").alias("partition_id")
-        ).agg(F.count(F.lit(1)).alias("rows_checked"))
-        vcounts = violations.filter(F.col("severity") == "error").groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("violation_count"),
-            F.count_distinct("rule_id").alias("rules_failed"),
+            F.expr(f"CAST({_q(self.partition_col)} AS STRING) AS partition_id")
+        ).agg(F.expr("count(1) AS rows_checked"))
+        vcounts = violations.filter("severity = 'error'").groupBy("partition_id").agg(
+            F.expr("count(1) AS violation_count"), F.expr("count(DISTINCT rule_id) AS rules_failed")
         )
-        return rows.join(vcounts, "partition_id", "full").select(
-            F.lit(run_id).alias("run_id"),
+        return rows.join(vcounts, "partition_id", "full").selectExpr(
+            f"{_lit(run_id)} AS run_id",
             *_verdict_cols(
-                F.coalesce("violation_count", F.lit(0)),
-                F.coalesce("rows_checked", F.lit(0)),
-                F.create_map(
-                    F.lit("rules_failed"),
-                    F.coalesce("rules_failed", F.lit(0)).cast("string"),
-                ),
-                attempted,
+                "coalesce(violation_count, 0)", "coalesce(rows_checked, 0)",
+                "map('rules_failed', CAST(coalesce(rules_failed, 0) AS STRING))", attempted,
             ),
         )

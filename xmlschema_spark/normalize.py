@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xmlschema_spark.compiler import whitespace_normalize
+from xmlschema_spark.compiler import _q, whitespace_normalize
 
 
 def normalize_table(
@@ -59,7 +59,7 @@ def normalize_table(
     for field in df.schema.fields:
         c = F.col(field.name)
         if field.name in whitespace:
-            c = whitespace_normalize(c, whitespace[field.name])
+            c = F.expr(whitespace_normalize(_q(field.name), whitespace[field.name]))
         if field.name in defaults:
             c = F.coalesce(c, F.lit(defaults[field.name]))
         if field.name in casts:

@@ -75,7 +75,12 @@ CUSTOM_ROW_KINDS: dict[str, Any] = {}
 def register_rule_kind(name: str, compile_fn, reason_fn=None) -> None:
     """Register a custom row-level rule kind. ``compile_fn(rule)`` must
     return a boolean Spark Column (True = row passes); ``reason_fn(rule)``
-    optionally returns the violation reason string."""
+    optionally returns the violation reason string.
+
+    A custom kind is a Column lane: where the built-in kinds compile to
+    Spark SQL text that the engine splices into one ``selectExpr``, the
+    engine binds each custom kind's Column on its own, at a few py4j round
+    trips per Column operation ``compile_fn`` makes."""
     if name in ALL_KINDS:
         raise RuleCompileError(f"cannot shadow built-in rule kind {name!r}")
     CUSTOM_ROW_KINDS[name] = (compile_fn, reason_fn)
