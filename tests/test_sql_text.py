@@ -106,6 +106,29 @@ def test_every_row_kind_is_two_valued(spark):
     assert wrong == {}
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_occurs_passes_null_arrays_whatever_the_ansi_setting(spark, ansi):
+    # without ANSI, size(NULL) is -1 rather than NULL
+    rules = [
+        Rule("r0", "occurs", "v", {"min": 1, "max": 2}),
+        Rule("r1", "occurs", "v", {"min": 0}),
+        Rule("r2", "occurs", "vs", {"min": 1, "max": 2, "each": True}),
+    ]
+    df = spark.createDataFrame(
+        [("null", None, [None]), ("empty", [], [[]]), ("one", ["a"], [["a"]])],
+        "name string, v array<string>, vs array<array<string>>",
+    )
+    key = "spark.sql.ansi.enabled"
+    try:
+        spark.conf.set(key, ansi)
+        got = df.select("name", *[compile_row_rule(r).alias(r.rule_id) for r in rules]).collect()
+    finally:
+        spark.conf.unset(key)
+    assert {r.name: (r.r0, r.r1, r.r2) for r in got} == {
+        "null": (True, True, True), "empty": (False, True, False), "one": (True, True, True),
+    }
+
+
 # ------------------------------------------------------------ enumeration
 
 
@@ -226,7 +249,7 @@ def test_literals_match_f_lit(spark):
     values = [
         0, -1, 2**31 - 1, -(2**31), 2**31, -(2**40), 1.5, -0.0, 1e300, 5e-324,
         math.nan, math.inf, -math.inf, True, False, None,
-        "plain", "it's", "a\\b", "x\\d\\t", ASTRAL, "tab\there",
+        "plain", "it's", "a\\b", "x\\d\\t", ASTRAL, "tab\there", b"\x00'\\", bytearray(b"ab"),
         decimal.Decimal("1.50"), decimal.Decimal("-0.001"),
         datetime.timedelta(days=1, microseconds=5), -datetime.timedelta(minutes=10),
         datetime.date(2020, 1, 2), datetime.datetime(2020, 1, 2, 3, 4, 5, 6),

@@ -14,6 +14,10 @@ and a gate wraps the text. The engine splices the texts of a whole rule
 set into one ``selectExpr`` per output, so its plans cost a few JVM round
 trips instead of several per ``Column`` operation.
 
+The same literals build driver-side result rows: :func:`local_frame`
+turns a Python list into a ``SELECT … FROM VALUES`` that Catalyst plans
+as a ``LocalRelation``.
+
 Two lanes stay ``Column``s, because they run Python or user code: the
 pattern fallback (:func:`_pattern_fallback_udf`, a pandas UDF for XSD
 patterns Java regex cannot express) and the kinds added with
@@ -32,8 +36,9 @@ import datetime
 import decimal
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from xmlschema_spark.functions.xsd_regex import (
     NCNAME_CHAR_INNER,
@@ -115,7 +120,27 @@ def _lit(v) -> str:
         if "'" in v or "\\" in v:
             return f"CAST(X'{v.encode().hex()}' AS STRING)"
         return f"'{v}'"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
     raise RuleCompileError(f"no SQL literal for {v!r}")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-side rows, as one
+    ``SELECT … FROM VALUES`` of :func:`_lit` literals. Catalyst folds it
+    into a ``LocalRelation``: collecting it launches no job, and an empty
+    one (``LIMIT 0``) is pruned from a union. ``createDataFrame`` over a
+    Python list instead plans a PythonRDD scan, which runs
+    ``defaultParallelism`` Python worker tasks whenever it executes."""
+    names = [f"`{f.name.replace('`', '``')}`" for f in schema.fields]
+    types = [f.dataType.simpleString() for f in schema.fields]
+    if not rows:
+        cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for t, n in zip(types, names))
+        return spark.sql(f"SELECT {cols} LIMIT 0")
+    cols = ", ".join(f"CAST(c{i} AS {t}) AS {n}" for i, (t, n) in enumerate(zip(types, names)))
+    values = ", ".join(f"({', '.join(map(_lit, r))})" for r in rows)
+    aliases = ", ".join(f"c{i}" for i in range(len(names)))
+    return spark.sql(f"SELECT {cols} FROM VALUES {values} AS t({aliases})")
 
 
 def whitespace_normalize(v: str, mode: str) -> str:
@@ -141,7 +166,7 @@ def _passes_when_null(c: str, ok: str) -> str:
 def _np(ok: str) -> str:
     """Single-reference form of the NULL-passes facet semantics, for
     predicates that PROPAGATE null from the value column (comparisons,
-    rlike/regexp chains, IN over non-null lists, length/size):
+    rlike/regexp chains, IN over non-null lists, length):
     the predicate is NULL exactly when the value is NULL, so
     ``coalesce(pred, true)`` == ``c IS NULL OR pred`` while referencing
     the value expression ONCE instead of twice. That matters when the
@@ -282,9 +307,13 @@ def _scalar_ok(rule: Rule, c: str, allow_udf: bool = True) -> str | Column:
     elif k == "fixed":
         ok = _np(f"({c} = {_lit(rule.param('value'))})")
     elif k == "occurs":
+        # not _np: with spark.sql.ansi.enabled=false, size(NULL) is -1,
+        # not NULL, so the coalesce would fail a NULL array
         hi = rule.param("max")
         ok = f"size({c}) >= {int(rule.param('min', 0))}"
-        ok = _np(f"({ok})" if hi is None else f"({ok} AND size({c}) <= {int(hi)})")
+        if hi is not None:
+            ok = f"{ok} AND size({c}) <= {int(hi)}"
+        ok = _passes_when_null(c, f"({ok})")
     elif k == "assertion_sql":
         sql = rule.param("sql")
         if not sql:

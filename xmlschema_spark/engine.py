@@ -22,7 +22,10 @@ walks a document once for every constraint kind):
    - the streaming verdicts: the per-row error total;
 3. set-level rules (unique/key/keyref) run as hash aggregations /
    left-anti joins and drift rules as per-partition scores; their rows go
-   through the same violation-row builder;
+   through the same violation-row builder. Rows built on the driver (drift
+   scores, an empty violation set) are LocalRelations
+   (``compiler.local_frame``), never a ``createDataFrame`` over a Python
+   list, whose PythonRDD scan would start Python worker tasks;
 4. verdicts: per-partition PASS/FAIL + counts + the PSVI validity, from one
    builder for ``validate`` and ``validate_one_pass`` alike.
 
@@ -45,7 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xmlschema_spark.compiler import _lit, _q, _row_ok, violation_reason
+from xmlschema_spark.compiler import _lit, _q, _row_ok, local_frame, violation_reason
 from xmlschema_spark.operators import drift as drift_ops
 from xmlschema_spark.operators import identity as id_ops
 from xmlschema_spark.operators import multimodal as mm_ops
@@ -263,9 +266,11 @@ class ValidationEngine:
     # ------------------------------------------------------------------ row
 
     def row_violations(self, df: DataFrame, run_id: str) -> DataFrame:
-        """One scan; every rule a boolean; failures exploded to rows."""
+        """One scan; every rule a boolean; failures exploded to rows. No
+        row rules: an empty LocalRelation, which Catalyst prunes from the
+        violation union."""
         if not self._n_row:
-            return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+            return local_frame(df.sparkSession, [], VIOLATION_SCHEMA)
         return _exploded(
             df, run_id, self._checks[: self._n_row],
             row_id=f"CAST({_q(self.id_col)} AS STRING)",
@@ -388,7 +393,7 @@ class ValidationEngine:
 
         if mode == "skip":
             # skip decodes raw, checks nothing (simple_types.py:334,518-523)
-            empty = spark.createDataFrame([], VIOLATION_SCHEMA)
+            empty = local_frame(spark, [], VIOLATION_SCHEMA)
             verdicts = self._verdicts(df, empty, run_id, attempted="none")
             return ValidationResult(run_id, empty, verdicts, stats_df, mode)
 
@@ -405,7 +410,7 @@ class ValidationEngine:
                 lambda: self.set_violations(df, run_id, secondary),
                 lambda: self.dataset_violations(df, run_id),
             ]
-            violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+            violations = local_frame(spark, [], VIOLATION_SCHEMA)
             for make in branch_makers:
                 hit_found = False
                 for branch in make():
@@ -432,20 +437,28 @@ class ValidationEngine:
             )
             return ValidationResult(run_id, violations, verdicts, stats_df, mode)
 
+        # violations are consumed at least twice (caller sink + verdict
+        # aggregation) — persist so the wide pass / decode UDFs / joins run
+        # once. Violations are tiny relative to the input scan, so this
+        # holds at 10^12-row scale where recomputing the scan would not.
+        violations = self._lax_violations(df, run_id, secondary).persist()
+        verdicts = self._verdicts(df, violations, run_id)
+        return ValidationResult(run_id, violations, verdicts, stats_df, mode)
+
+    def _lax_violations(
+        self, df: DataFrame, run_id: str, secondary: dict[str, DataFrame] | None = None
+    ) -> DataFrame:
+        """Every violation of lax mode, unpersisted: the union of the row,
+        set and dataset branches. A caller with one consumer (the
+        checkpoint's table-scoped sink) writes it as is; ``validate``
+        persists it for its two."""
         parts = [self.row_violations(df, run_id)]
         parts += self.set_violations(df, run_id, secondary)
         parts += self.dataset_violations(df, run_id)
         violations = parts[0]
         for p in parts[1:]:
             violations = violations.unionByName(p)
-
-        # violations are consumed at least twice (caller sink + verdict
-        # aggregation) — persist so the wide pass / decode UDFs / joins run
-        # once. Violations are tiny relative to the input scan, so this
-        # holds at 10^12-row scale where recomputing the scan would not.
-        violations = violations.persist()
-        verdicts = self._verdicts(df, violations, run_id)
-        return ValidationResult(run_id, violations, verdicts, stats_df, mode)
+        return violations
 
     # ------------------------------------------------------------- one-pass
 

@@ -9,7 +9,9 @@ reference distribution (by default the whole table's).
   ``_histogram_drift`` — ONE distributed (partition, bucket) histogram
   aggregation, the metric arithmetic driver-side in numpy on the tiny
   result, and a distributed skeleton-join SQL fallback above a cell cap.
-  The metrics differ only in their final formula.
+  The metrics differ only in their final formula. The driver-side scores
+  come back as a LocalRelation (``compiler.local_frame``): a consumer
+  that unions or collects them starts no Spark task for them.
 - **KS** uses ``applyInPandas`` per partition (vectorized numpy, no
   per-row Python): exact empirical CDF vs a reference CDF evaluated on a
   quantile grid. Grid is computed once (approx_percentile, one pass) and
@@ -24,6 +26,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from xmlschema_spark.compiler import local_frame
 
 _EPS = 1e-6
 
@@ -123,7 +128,7 @@ def _histogram_drift(
     schema = df.select(partition_col).schema.add(metric, "double")
     lo, hi = _bounds(df, column)
     if lo is None:
-        return df.sparkSession.createDataFrame([], schema)
+        return local_frame(df.sparkSession, [], schema)
     bucket = _bucket(column, lo, hi, bins)
     width = ((hi - lo) or 1.0) / bins
     hist_rows = (
@@ -152,7 +157,7 @@ def _histogram_drift(
     for part, counts in parts.items():
         n = counts.sum()
         out.append((part, float(_driver_value(metric, counts / max(n, 1), q0, n, width))))
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def _skeleton_drift(df, column, partition_col, metric, bucket, bins, reference, width):
@@ -388,10 +393,11 @@ def ks(
     grid = ref_vals.agg(
         F.percentile_approx(column, probs, 10_000).alias("q")
     ).first()["q"]
+    out_schema = (
+        T.StructType().add(partition_col, "string").add("ks", "double").add("n", "long")
+    )
     if grid is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{partition_col} string, ks double, n long"
-        )
+        return local_frame(df.sparkSession, [], out_schema)
     uniq = sorted(set(grid))
     cdf_row = ref_vals.agg(
         *[
@@ -401,8 +407,6 @@ def ks(
     ).first()
     grid_arr = np.asarray(uniq, dtype=np.float64)
     ref_cdf = np.asarray([cdf_row[f"c{i}"] for i in range(len(uniq))])
-
-    out_schema = f"{partition_col} string, ks double, n long"
 
     def _ks_one(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf[column].to_numpy(dtype=np.float64)

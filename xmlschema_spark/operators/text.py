@@ -10,7 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from xmlschema_spark.compiler import local_frame
 from xmlschema_spark.rules import register_rule_kind
 
 # tiny per-language stopword lists for the n-gram/stopword-ratio heuristic
@@ -155,6 +157,9 @@ def _normalize_trigram_py(s: str) -> str:
     return f" {out} " if out else ""
 
 
+_WEIGHTS_SCHEMA = T.StructType().add("lang", "string").add("tri", "string").add("bonus", "long")
+
+
 def build_trigram_profiles(
     top_k: int = 200, alpha: float = 0.5, scale: int = 1000,
 ) -> tuple[dict[str, int], list[tuple[str, str, int]]]:
@@ -237,9 +242,7 @@ def detect_language_trigram(
     bases, weights = build_trigram_profiles(top_k=top_k, alpha=alpha, scale=scale)
     langs = sorted(bases)
     spark = df.sparkSession
-    wdf = F.broadcast(
-        spark.createDataFrame(weights, "lang string, tri string, bonus long")
-    )
+    wdf = F.broadcast(local_frame(spark, weights, _WEIGHTS_SCHEMA))
 
     c = F.col(text_col)
     norm = _trigram_norm_col(c)

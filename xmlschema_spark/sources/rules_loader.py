@@ -12,6 +12,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from xmlschema_spark.compiler import local_frame
 from xmlschema_spark.rules import Rule, RuleSet
 
 RULES_DF_SCHEMA = T.StructType(
@@ -36,7 +37,7 @@ def rules_to_df(spark: SparkSession, ruleset: RuleSet) -> DataFrame:
         (r.rule_id, r.kind, r.column, json.dumps(r.params), r.gate, r.scope, r.severity)
         for r in ruleset
     ]
-    return spark.createDataFrame(rows, RULES_DF_SCHEMA)
+    return local_frame(spark, rows, RULES_DF_SCHEMA)
 
 
 def ruleset_from_df(df: DataFrame) -> RuleSet:
@@ -75,7 +76,7 @@ def rules_json_to_df(spark: SparkSession, path: str | Path) -> DataFrame:
         )
         for d in raw
     ]
-    return spark.createDataFrame(rows, RULES_DF_SCHEMA)
+    return local_frame(spark, rows, RULES_DF_SCHEMA)
 
 
 def meta_ruleset() -> RuleSet:
