@@ -166,9 +166,9 @@ def test_checkpoint_sinks_are_unchanged(spark, no_decode, tmp_path):
     }
 
 
-# the generators that build a DataFrame from a pandas frame (Arrow), not
-# from a Python list
-PANDAS_SOURCES = {"sources/images.py", "sources/audio.py", "sources/video.py"}
+# the one generator that builds a DataFrame from a pandas frame (Arrow),
+# not from a Python list
+PANDAS_SOURCES = {"sources/images.py"}
 
 
 def test_package_builds_no_frame_from_a_python_list():

@@ -4,6 +4,8 @@ and the watermark-windowed duplicate-key detector — deterministic
 micro-batches, exact expected rows, batch↔streaming agreement with
 operators.identity on the same data."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -258,6 +260,23 @@ def test_duplicate_keys_stream_multi_column_and_scope(spark, tmp_path):
         for r in spark.sql("SELECT * FROM dup_scope").collect()
     ]
     assert got == [("s1", "x", 1, 2)]
+
+    # the batch operator on composite keys where most tuples hold a NULL
+    # field: only complete tuples count, scoped or not, salted or not
+    many = [
+        (s, a, b) for s in ("s1", "s2") for a in ("x", None) for b in (1, None)
+    ] * 3 + [("s1", "x", 1), ("s1", None, None)]
+    batch = spark.createDataFrame(many, "scope string, a string, b long")
+    complete = [r for r in many if None not in r[1:]]
+    for scope_col, key in (("scope", lambda r: r), (None, lambda r: r[1:])):
+        want = {k: n for k, n in Counter(map(key, complete)).items() if n > 1}
+        for salt in (0, 3):
+            dups = identity.duplicate_values(
+                batch, ["a", "b"], scope_col=scope_col, salt_partitions=salt
+            )
+            got = {tuple(r)[:-1]: r.dup_count for r in dups.collect()}
+            assert got == want, (scope_col, salt)
+    assert want == {("x", 1): 7}
 
 
 def test_duplicate_keys_stream_empty_columns_raises(spark):

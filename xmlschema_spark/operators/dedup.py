@@ -5,27 +5,27 @@ detection, identities.py:198-221, generalized from exact keys to content
 similarity). All variants are shuffle-conscious:
 
 - exact: hash the normalized content, groupBy — two-phase agg, one shuffle.
-- minhash LSH: shingle → k minhashes via built-in ``xxhash64(col, seed)``
-  (fully JVM-side, no UDF) → band hashes → explode bands → self-join on
-  (band, hash) buckets → verified candidate pairs. At 10^12 docs the
-  band-bucket join is the scalable path (no O(n²)); hot buckets (boiler-
-  plate docs) are capped by ``max_bucket_size`` exactly like salting caps
-  hot keys.
-- exact-jaccard verification via an inverted-index join (explode shingles,
-  join on shingle, count common) — still no O(n²).
-- simhash: 64-bit bit-vote signature computed fully JVM-side (explode
-  tokens → hash → SWAR-packed vote lanes in one partial-aggregated
-  hash agg), near-dup = small hamming distance.
-- embedding near-dup: cosine ≥ threshold via LSH bucketing or brute force
-  (see similarity.py).
+- near-duplicates: every similarity generator here and in similarity.py
+  assigns rows to blocks and pairs rows only within a block, through one
+  core, :func:`_block_pairs` — one groupBy per block key collects each
+  block's members into a list, blocks above a cap are dropped, and each
+  remaining list expands to its ``id_a < id_b`` pairs in place. No
+  O(n²) anywhere; the blockings are:
+  - minhash LSH: shingle → k minhashes via built-in ``xxhash64(col,
+    seed)`` (fully JVM-side, no UDF) → band hashes → block on (band,
+    band_hash) → count shared bands per pair;
+  - exact Jaccard: an inverted index — block on shingle, count common
+    shingles per pair, divide by |∪| from per-doc sizes;
+  - simhash / phash: 64-bit signatures (simhash computed fully JVM-side:
+    explode tokens → hash → SWAR-packed vote lanes in one
+    partial-aggregated hash agg), pigeonhole-blocked on signature
+    chunks, verified by hamming distance;
+  - embeddings: hyperplane-LSH buckets or SemDeDup cells
+    (see similarity.py), verified by cosine.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -127,6 +127,59 @@ def shingles(col, k: int = 5):
     )
 
 
+def _block_pairs(rows: DataFrame, block_cols: list[str], cap: int | None) -> DataFrame:
+    """The within-block pairing every near-duplicate generator shares.
+
+    ``rows`` holds an ``id`` column, the ``block_cols`` and any payload
+    columns. A row is *pairable* when its id and all its block columns
+    are non-NULL; other rows never pair and never count.
+
+    The cap rule, for every caller: a block with more than ``cap``
+    pairable rows is dropped whole, so a block of exactly ``cap`` rows
+    still pairs. This is the skew guard against quadratic blow-up — a
+    boilerplate band bucket, a stopword shingle, a near-black phash
+    chunk, a zero-vector LSH bucket or an overfull SemDeDup cell would
+    otherwise pair 10^12 candidates. Dropped blocks are dropped coverage
+    (like hot-key salting caps): a pair that shares ONLY over-cap blocks
+    is missed. ``cap=None`` keeps every block.
+
+    Returns one row per (pair, shared block): ``id_a < id_b`` and each
+    payload column ``p`` as ``p_a`` and ``p_b``. A pair sharing k blocks
+    appears k times; callers count or de-duplicate.
+
+    Plan: one groupBy on the block key collects each block's members
+    (id + payload) into a list, the cap is a filter on the list size,
+    and each surviving list expands to its pairs in place — one shuffle,
+    no self-join, and the pair rows are produced factorized per block
+    rather than by re-matching rows across a join. An over-cap block is
+    still collected once before the size filter drops it; counting it
+    first (a window over the block key) measured slower on embedding
+    pairs, whose payload the window has to sort."""
+    payload = [c for c in rows.columns if c != "id" and c not in block_cols]
+    kept = F.size("__m") > 1
+    if cap is not None:
+        kept = kept & (F.size("__m") <= cap)
+    blocks = (
+        rows.dropna(subset=["id", *block_cols])
+        .groupBy(*block_cols)
+        .agg(F.collect_list(F.struct("id", *payload)).alias("__m"))
+        .filter(kept)
+    )
+    pairs = F.filter(
+        F.flatten(
+            F.transform(
+                "__m", lambda a: F.transform("__m", lambda b: F.struct(a.alias("a"), b.alias("b")))
+            )
+        ),
+        lambda p: p["a"]["id"] < p["b"]["id"],
+    )
+    return blocks.select(F.explode(pairs).alias("__p")).select(
+        F.col("__p.a.id").alias("id_a"),
+        F.col("__p.b.id").alias("id_b"),
+        *[F.col(f"__p.{s}.{c}").alias(f"{c}_{s}") for c in payload for s in ("a", "b")],
+    )
+
+
 def minhash_signature(shingle_col, num_hashes: int = 64, hash_family: str = "xxhash64"):
     """k minhash values, each = min over shingles of hash(shingle, seed).
     Pure built-ins: transform + array_min + hash — whole-stage codegen,
@@ -142,7 +195,7 @@ def minhash_signature(shingle_col, num_hashes: int = 64, hash_family: str = "xxh
       identical lowercase 32-char hex, and fixed-length hex compares
       lexicographically exactly as the 128-bit value compares numerically
       — so the ENTIRE minhash+LSH pipeline (shingling, lanes, banding,
-      bucket join, caps) becomes end-to-end oracle-certifiable, not just
+      bucket pairing, caps) becomes end-to-end oracle-certifiable, not just
       a hash-free sibling. Identical plan shape; md5 costs ~2-3x xxhash64
       per call, which is why it is the certification family, not the
       production default.
@@ -202,9 +255,9 @@ def minhash_lsh_candidates(
     similarity threshold (~ (1/bands)^(1/rows)).
 
     Scale notes: the only shuffles are the band-bucket groupBy and the
-    pair groupBy. ``max_bucket_size`` drops degenerate buckets (e.g. empty
-    docs / boilerplate) that would otherwise create quadratic pair blowup
-    — the LSH equivalent of hot-key salting, logged as dropped coverage.
+    pair groupBy. ``max_bucket_size`` is the block cap (see
+    :func:`_block_pairs`) against degenerate buckets (e.g. empty docs /
+    boilerplate).
 
     ``hash_family``: see :func:`minhash_signature` — ``"md5"`` makes the
     whole pipeline DuckDB-oracle-expressible (band hash = md5 of the
@@ -229,35 +282,19 @@ def _lsh_pairs_from_sigs(
     max_bucket_size: int,
     hash_family: str,
 ) -> DataFrame:
-    """The banding + bucket-join stage of minhash LSH over a precomputed
-    (doc, sig) table → (id_a, id_b, n_shared_bands). Shared by
+    """The banding stage of minhash LSH over a precomputed (doc, sig)
+    table → (id_a, id_b, n_shared_bands): :func:`_block_pairs` on
+    (band, band_hash), capped at ``max_bucket_size``. Shared by
     :func:`minhash_lsh_candidates` (computes signatures inline) and
     :func:`minhash_estimates` (persists signatures so the estimate join
     reuses them)."""
     banded = sigs.select(
-        "doc",
+        F.col("doc").alias("id"),
         F.posexplode(
             band_hash_array(F.col("sig"), num_hashes, bands, hash_family)
         ).alias("band", "band_hash"),
     )
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.collect_list("doc").alias("docs"))
-        .filter((F.size("docs") > 1) & (F.size("docs") <= max_bucket_size))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "docs",
-                        lambda a: F.transform("docs", lambda b: F.struct(a.alias("a"), b.alias("b"))),
-                    )
-                ),
-                lambda p: p["a"] < p["b"],
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
+    pairs = _block_pairs(banded, ["band", "band_hash"], max_bucket_size)
     return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_shared_bands"))
 
 
@@ -331,11 +368,11 @@ def jaccard_pairs(
     shingle_k: int = 5,
     max_postings: int = 500,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via an inverted-index join
-    (explode shingles → self-join on shingle → |∩| per pair → |∪| from
-    per-doc sizes) → (id_a, id_b, jaccard). No O(n²) cross join; the
-    posting-list cap bounds hot shingles (stopword-only shingles), the
-    same skew treatment as hot keys.
+    """EXACT n-gram Jaccard near-dup pairs via an inverted index
+    (explode shingles → :func:`_block_pairs` on shingle → |∩| per pair →
+    |∪| from per-doc sizes) → (id_a, id_b, jaccard). No O(n²) cross
+    join; ``max_postings`` is the block cap (see :func:`_block_pairs`),
+    which bounds hot shingles (stopword-only shingles).
 
     The shingled intermediate is persisted for the duration of this call
     only: the result is materialized eagerly (persist + count) and the
@@ -343,27 +380,17 @@ def jaccard_pairs(
     long-lived driver don't leak cached storage. Call ``.unpersist()`` on
     the RETURNED DataFrame when done with it (same contract as
     ``ValidationResult.unpersist``)."""
-    # persist the shingled form: it feeds sizes, the posting-frequency pass,
-    # and BOTH sides of the self-join — recomputing the nested
-    # split/sequence/slice/concat expression 5x dominated wall time (4x
-    # measured speedup at sf0.1)
+    # persist the shingled form: it feeds both the sizes and the postings —
+    # recomputing the nested split/sequence/slice/concat expression per
+    # consumer dominated wall time (4x measured speedup at sf0.1)
     sh = df.select(
         F.col(id_col).alias("doc"), shingles(F.col(text_col), shingle_k).alias("sh")
     ).persist()
     sizes = sh.select("doc", F.size("sh").alias("n"))
-    posts = sh.select("doc", F.explode("sh").alias("shingle"))
-    # cap pathological posting lists (skew guard)
-    freq = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    posts = posts.join(
-        F.broadcast(freq.filter(F.col("df_") > max_postings).select("shingle")),
-        "shingle",
-        "left_anti",
-    )
-    a = posts.alias("a")
-    b = posts.alias("b")
+    posts = sh.select(F.col("doc").alias("id"), F.explode("sh").alias("shingle"))
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        _block_pairs(posts, ["shingle"], max_postings)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sa = sizes.select(F.col("doc").alias("id_a"), F.col("n").alias("na"))
@@ -485,17 +512,14 @@ def simhash_near_duplicates(
     """Near-dup pairs by SimHash hamming ≤ k, found scalably via the
     pigeonhole trick: split 64 bits into (max_hamming+1) chunks — any pair
     within hamming k agrees exactly on ≥1 chunk → block on chunk value,
-    verify hamming inside blocks. One explode + one equi-join; no O(n²).
+    verify hamming inside blocks (:func:`hamming_near_duplicates`); no
+    O(n²).
 
-    ``max_block_size`` caps pigeonhole blocks the same way
-    :func:`minhash_lsh_candidates` caps LSH buckets: on a boilerplate-heavy
-    corpus millions of near-empty docs share signature 0, so one popular
-    (chunk_idx, chunk_val) block would make the within-block pairing
-    quadratic (10^6 members → 10^12 candidate pairs before the hamming
-    filter). Blocks above the cap are dropped via an anti-join on the
-    block-size aggregate — dropped coverage, like hot-key salting caps,
-    is the deliberate trade; a pair sharing ONLY an over-cap chunk is
-    missed. Pass ``None`` to disable (exhaustive small-scale/test use).
+    ``max_block_size`` is the block cap (see :func:`_block_pairs`): on a
+    boilerplate-heavy corpus millions of near-empty docs share signature
+    0, and one popular (chunk_idx, chunk_val) block would otherwise make
+    the within-block pairing quadratic. Pass ``None`` to disable
+    (exhaustive small-scale/test use).
 
     ``hash_family``: see :func:`simhash_signatures` — ``"md5"`` makes this
     whole operator DuckDB-oracle-expressible end to end."""
@@ -516,68 +540,41 @@ def hamming_near_duplicates(
     max_block_size: int | None = 200,
 ) -> DataFrame:
     """Pairs of rows whose PRECOMPUTED 64-bit signatures differ in at
-    most ``max_hamming`` bits — the pigeonhole-blocked hamming self-join
+    most ``max_hamming`` bits — the pigeonhole-blocked hamming pairing
     shared by :func:`simhash_near_duplicates` (which computes its
     signature from text first) and :func:`phash_near_duplicates` (whose
     signature already sits in the table). Split 64 bits into
     64/chunk_bits chunks: any pair within hamming k agrees exactly on
-    ≥ 1 chunk when chunks > k, so blocking on (chunk_idx, chunk_val)
-    finds every qualifying pair with one explode + one equi-join —
-    no O(n²) anywhere.
+    ≥ 1 chunk when chunks > k, so :func:`_block_pairs` on (chunk_idx,
+    chunk_val), de-duplicated across chunks, finds every qualifying pair
+    — no O(n²) anywhere.
 
-    ``max_block_size`` is the quadratic-blowup guard (same role as
-    :func:`minhash_lsh_candidates`' bucket cap): blocks above the cap —
-    e.g. millions of near-black images sharing a phash chunk — are
-    dropped via an anti-join on the block-size aggregate rather than
-    pairing 10^12 candidates. Pass ``None`` to disable (exhaustive
-    small-scale/oracle use). Output: (id_a, id_b, hamming), id_a < id_b.
+    ``max_block_size`` is the block cap (see :func:`_block_pairs`), e.g.
+    against millions of near-black images sharing a phash chunk. Pass
+    ``None`` to disable (exhaustive small-scale/oracle use). Output:
+    (id_a, id_b, hamming), id_a < id_b.
     """
     n_chunks = 64 // chunk_bits
     if max_hamming >= n_chunks:
         raise ValueError("need chunks > max_hamming for pigeonhole completeness")
-    sigs = df.select(F.col(id_col).alias("doc"), F.col(sig_col).alias("__sig"))
     mask = (1 << chunk_bits) - 1
-    chunks = sigs.select(
-        "doc",
-        "__sig",
+    sig = F.col(sig_col)
+    chunks = df.select(
+        F.col(id_col).alias("id"),
+        sig.alias("sig"),
         F.posexplode(
             F.array(
                 *[
-                    F.shiftrightunsigned(F.col("__sig"), i * chunk_bits).bitwiseAND(F.lit(mask))
+                    F.shiftrightunsigned(sig, i * chunk_bits).bitwiseAND(F.lit(mask))
                     for i in range(n_chunks)
                 ]
             )
         ).alias("chunk_idx", "chunk_val"),
     )
-    if max_block_size is not None:
-        # hot blocks are few by construction (each eats ≥ cap docs), so
-        # the anti-join side is tiny; AQE broadcasts it. The block-size
-        # groupBy shuffles on the same (chunk_idx, chunk_val) keys the
-        # self-join below needs, so the partitioning is reused.
-        hot = (
-            chunks.groupBy("chunk_idx", "chunk_val")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_block_size)
-            .select("chunk_idx", "chunk_val")
-        )
-        chunks = chunks.join(hot, ["chunk_idx", "chunk_val"], "left_anti")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.__sig").alias("ha"),
-            F.col("b.__sig").alias("hb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _block_pairs(chunks, ["chunk_idx", "chunk_val"], max_block_size).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return cand.withColumn("hamming", hamming).filter(
         F.col("hamming") <= max_hamming
     ).select("id_a", "id_b", "hamming")

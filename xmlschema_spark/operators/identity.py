@@ -45,10 +45,8 @@ def duplicate_values(
     """
     keys = [F.col(c) for c in columns]
     group = ([F.col(scope_col)] if scope_col else []) + keys
-    tuples = df.filter(
-        F.greatest(*[c.isNotNull() for c in keys]) if len(keys) > 1 else keys[0].isNotNull()
-    )
     # all fields must be present to form a tuple
+    tuples = df
     for c in keys:
         tuples = tuples.filter(c.isNotNull())
 

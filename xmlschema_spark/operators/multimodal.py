@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import functools
 import operator
-import re
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -514,24 +513,6 @@ def _register_header_kind(kind: str, aspects, what: str) -> None:
 _register_header_kind("header_consistent", _image_aspects, "container header")
 _register_header_kind("wav_header_consistent", _wav_aspects, "RIFF/WAVE header")
 _register_header_kind("gif_header_consistent", _gif_aspects, "GIF header")
-
-
-def regex_check(df: DataFrame, column: str, pattern: str, id_col: str) -> DataFrame:
-    """Fallback for XSD patterns the Java-regex translator can't express:
-    anchored Python ``re`` applied per Arrow batch via a vectorized pandas
-    UDF (pandas str.match is C-loop over the batch, not per-row Python)."""
-    compiled_src = pattern
-
-    @F.pandas_udf("boolean")
-    def _matches(s: pd.Series) -> pd.Series:
-        rex = re.compile(compiled_src)
-        return s.str.fullmatch(rex).astype("boolean")
-
-    return df.select(
-        F.col(id_col).alias("row_id"),
-        F.col(column),
-        _matches(F.col(column)).alias("matches"),
-    )
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int, id_col: str = "image_id") -> DataFrame:

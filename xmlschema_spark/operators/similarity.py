@@ -9,7 +9,9 @@
   Signatures are one Arrow-batched numpy matmul per batch (deterministic
   per-(seed, band, dim) projection constants; no per-row Python).
 - ``embedding_near_duplicates`` — all-pairs cosine ≥ t within LSH buckets
-  (near-dup dedup for embeddings).
+  (near-dup dedup for embeddings). It and ``semantic_dedup`` pair rows
+  through the near-duplicate family's one blocked-pair core,
+  ``dedup._block_pairs``.
 - ``semantic_dedup`` — SemDeDup (Abbas et al. 2023): coarse k-means (or
   fixed-seed Voronoi) cells, then lower-id-wins cosine dedup WITHIN each
   cell — the cluster bounds the quadratic.
@@ -23,6 +25,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from xmlschema_spark.operators.dedup import _block_pairs
 
 
 def _dot(a, b):
@@ -329,43 +333,23 @@ def embedding_near_duplicates(
     so equality with the exact all-pairs oracle on a fixture is a checked,
     reproducible fact (the banded analog of ``ivf_topk``'s full-probe).
 
-    ``max_bucket_size`` drops pathologically dense (band, bucket) groups
-    (e.g. a zero-vector cluster) before the quadratic within-bucket
-    pairing — the same skew guard as hot-key salting / MinHash bucket
-    caps. Dropped buckets mean dropped coverage for their members; raise
-    n_planes to split them instead of raising the cap."""
+    ``max_bucket_size`` is the block cap (see
+    :func:`~xmlschema_spark.operators.dedup._block_pairs`), e.g. against a
+    zero-vector cluster; dropped buckets mean dropped coverage for their
+    members, so raise n_planes to split them instead of raising the cap."""
     u = with_normalized(df.select(F.col(id_col).alias("id"), vec_col), vec_col, "u")
     u = u.select(
         "id", "u",
         F.posexplode(_banded_signatures(F.col("u"), n_planes, n_bands, seed))
         .alias("band", "bucket"),
     )
-    hot = (
-        u.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-        .select("band", "bucket")
-    )
-    u = u.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    a, b = u.alias("a"), u.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.u").alias("ua"),
-            F.col("b.u").alias("ub"),
-        )
+        _block_pairs(u, ["band", "bucket"], max_bucket_size)
         # dedup across bands BEFORE the O(dim) dot product
         .dropDuplicates(["id_a", "id_b"])
     )
     pairs = cand.select(
-        "id_a", "id_b", _dot(F.col("ua"), F.col("ub")).alias("cosine")
+        "id_a", "id_b", _dot(F.col("u_a"), F.col("u_b")).alias("cosine")
     )
     return pairs.filter(F.col("cosine") >= threshold)
 
@@ -414,16 +398,16 @@ def semantic_dedup(
 
     Scale shape: one bounded driver collect (k or sample_size rows), ONE
     corpus pass assigning cells via the Arrow-batched matmul of
-    :func:`_centroid_assign` — the assignment is persisted because four
-    consumers read it (hot-cell count, both self-join sides, the final
-    projection) and each would otherwise re-cross the Arrow boundary —
-    then one self-equi-join on cid (AQE handles cell skew; cells above
-    ``max_cluster_size`` are excluded from pairing — a skew guard, not a
-    semantics choice: their members are kept and flagged, raise
-    n_clusters to split them), one min-agg, one left join back. The join
-    payload carries unit vectors only for candidate pairs inside one
-    cell. Like :func:`~xmlschema_spark.operators.dedup.jaccard_pairs`,
-    the result is materialized eagerly (persist + count) so the
+    :func:`_centroid_assign` — the assignment is persisted because two
+    consumers read it (the pairing and the final projection) and each
+    would otherwise re-cross the Arrow boundary — then
+    :func:`~xmlschema_spark.operators.dedup._block_pairs` on cid
+    (``max_cluster_size`` is its block cap — a skew guard, not a
+    semantics choice: members of an over-cap cell are kept and flagged,
+    raise n_clusters to split them), one min-agg, one left join back.
+    Pairs carry unit vectors only inside one cell. Like
+    :func:`~xmlschema_spark.operators.dedup.jaccard_pairs`, the result
+    is materialized eagerly (persist + count) so the
     assignment cache is released before returning; call ``.unpersist()``
     on the RETURNED DataFrame when done with it.
 
@@ -482,19 +466,11 @@ def semantic_dedup(
     assigned = u.withColumn(
         "cid", _centroid_assign(F.col("u"), centroids)
     ).persist()
-    hot = (
-        assigned.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_cluster_size)
-        .select("cid")
-    )
-    pairable = assigned.join(F.broadcast(hot), "cid", "left_anti")
-    a, b = pairable.alias("a"), pairable.alias("b")
     dups = (
-        a.join(b, (F.col("a.cid") == F.col("b.cid")) & (F.col("b.id") < F.col("a.id")))
-        .filter(_dot(F.col("a.u"), F.col("b.u")) >= threshold)
-        .groupBy(F.col("a.id").alias("id"))
-        .agg(F.min(F.col("b.id")).alias("dup_of"))
+        _block_pairs(assigned, ["cid"], max_cluster_size)
+        .filter(_dot(F.col("u_a"), F.col("u_b")) >= threshold)
+        .groupBy(F.col("id_b").alias("id"))
+        .agg(F.min("id_a").alias("dup_of"))
     )
     out = (
         assigned.select("id", "cid")

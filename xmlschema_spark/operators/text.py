@@ -35,10 +35,6 @@ def token_count(col) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col) -> Column:
-    return F.length(col)
-
-
 def stopword_hits(col, lang: str) -> Column:
     words = STOPWORDS[lang]
     return F.size(F.array_intersect(tokens(col), F.array(*[F.lit(w) for w in words])))
@@ -428,6 +424,49 @@ def _ngram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
+def _lm_model(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    model_df: DataFrame | None,
+    model_text_col: str | None,
+    alpha: float,
+) -> tuple[DataFrame, str, str]:
+    """The n-gram scorers' shared prologue: check α and resolve the model
+    corpus → (model, model id column, model text column). The model is
+    the scored corpus itself unless ``model_df`` is given. The model side
+    only feeds corpus-level aggregations, so its id column is irrelevant:
+    a caller-supplied ``model_df`` gets a constant ``__mid`` placeholder
+    rather than any assumed positional id column."""
+    if alpha <= 0:
+        raise ValueError(f"alpha must be > 0, got {alpha}")
+    mtext = text_col if model_text_col is None else model_text_col
+    if model_df is None:
+        return df, id_col, mtext
+    return model_df.select(F.lit(0).alias("__mid"), F.col(mtext)), "__mid", mtext
+
+
+def _lm_per_doc(df: DataFrame, id_col: str, scored: DataFrame, n_col: str) -> DataFrame:
+    """The n-gram scorers' shared epilogue: per-doc ``n_col`` (n-gram
+    count) and ``avg_logp`` over ``scored``'s (__id, __logp) rows, left
+    joined back so every input doc keeps one row (count 0, NULL
+    ``avg_logp`` when it has too few tokens), plus ``ppl`` =
+    exp(−avg_logp)."""
+    per_doc = scored.groupBy("__id").agg(
+        F.count(F.lit(1)).alias(n_col), F.avg("__logp").alias("avg_logp")
+    )
+    return (
+        df.select(F.col(id_col).alias("__id"))
+        .join(per_doc, "__id", "left")
+        .select(
+            F.col("__id").alias(id_col),
+            F.coalesce(F.col(n_col), F.lit(0)).alias(n_col),
+            "avg_logp",
+            F.exp(-F.col("avg_logp")).alias("ppl"),
+        )
+    )
+
+
 def ngram_lm_score(
     df: DataFrame,
     id_col: str,
@@ -461,18 +500,7 @@ def ngram_lm_score(
     (ReusedExchange collapses the three aggs' shuffles); per-doc
     aggregation is a partial map-side avg. No driver data, no UDFs —
     ln/avg are codegen."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be > 0, got {alpha}")
-    model = df if model_df is None else model_df
-    mtext = text_col if model_text_col is None else model_text_col
-    # the model side only feeds corpus-level aggregations, so its id column
-    # is irrelevant — use a constant placeholder rather than assuming any
-    # positional id column on a caller-supplied model_df
-    if model_df is not None:
-        model = model.select(F.lit(0).alias("__mid"), F.col(mtext))
-        mid = "__mid"
-    else:
-        mid = id_col
+    model, mid, mtext = _lm_model(df, id_col, text_col, model_df, model_text_col, alpha)
     mbg = _ngram_rows(model, mid, mtext, 2)
     bigram_counts = mbg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c12"))
     ctx_counts = mbg.groupBy("w1").agg(F.count(F.lit(1)).alias("__c1"))
@@ -494,19 +522,7 @@ def ngram_lm_score(
             ).alias("__logp"),
         )
     )
-    per_doc = scored.groupBy("__id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"), F.avg("__logp").alias("avg_logp")
-    )
-    return (
-        df.select(F.col(id_col).alias("__id"))
-        .join(per_doc, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            "avg_logp",
-            F.exp(-F.col("avg_logp")).alias("ppl"),
-        )
-    )
+    return _lm_per_doc(df, id_col, scored, "n_bigrams")
 
 
 def ngram_lm3_score(
@@ -543,20 +559,10 @@ def ngram_lm3_score(
     skew-split handles stopword-tuple hot keys and Spark broadcasts the
     dims when they fit (the usual case). No driver data, no UDFs —
     the entire mixture is codegen arithmetic."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be > 0, got {alpha}")
+    model, mid, mtext = _lm_model(df, id_col, text_col, model_df, model_text_col, alpha)
     l3, l2, l1 = (float(x) for x in lambdas)
     if min(l3, l2, l1) <= 0 or abs(l3 + l2 + l1 - 1.0) > 1e-9:
         raise ValueError(f"lambdas must be positive and sum to 1, got {lambdas}")
-    model = df if model_df is None else model_df
-    mtext = text_col if model_text_col is None else model_text_col
-    if model_df is not None:
-        # corpus-level aggregations only — constant placeholder id, as in
-        # ngram_lm_score
-        model = model.select(F.lit(0).alias("__mid"), F.col(mtext))
-        mid = "__mid"
-    else:
-        mid = id_col
     mtg = _ngram_rows(model, mid, mtext, 3)
     mbg = _ngram_rows(model, mid, mtext, 2)
     mtok = model.select(F.explode(tokens(F.col(mtext))).alias("w"))
@@ -596,19 +602,7 @@ def ngram_lm3_score(
         "__id",
         F.log(F.lit(l3) * p3 + F.lit(l2) * p2 + F.lit(l1) * p1).alias("__logp"),
     )
-    per_doc = scored.groupBy("__id").agg(
-        F.count(F.lit(1)).alias("n_trigrams"), F.avg("__logp").alias("avg_logp")
-    )
-    return (
-        df.select(F.col(id_col).alias("__id"))
-        .join(per_doc, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.coalesce(F.col("n_trigrams"), F.lit(0)).alias("n_trigrams"),
-            "avg_logp",
-            F.exp(-F.col("avg_logp")).alias("ppl"),
-        )
-    )
+    return _lm_per_doc(df, id_col, scored, "n_trigrams")
 
 
 def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

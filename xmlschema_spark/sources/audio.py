@@ -18,7 +18,6 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from xmlschema_spark.functions.containers import encode_wav
@@ -134,14 +133,3 @@ def generate_audio_pdf(n: int, seed: int = 42, n_parts: int = 8, **fracs) -> pd.
         _make_row(i, seed, _family_of(i, bounds), n_parts) for i in range(n)
     ]
     return pd.DataFrame(rows, columns=_COLUMNS)
-
-
-def generate_audio_df(
-    spark: SparkSession, n: int, seed: int = 42, n_parts: int = 8, **fracs
-) -> DataFrame:
-    """Spark DataFrame over the synthetic clips, range-partitioned on
-    (part, audio_id) like the image generator (even partitions with
-    part-locality)."""
-    pdf = generate_audio_pdf(n, seed=seed, n_parts=n_parts, **fracs)
-    df = spark.createDataFrame(pdf, schema=AUDIO_SCHEMA)
-    return df.repartitionByRange(max(8, n_parts), "part", "audio_id")

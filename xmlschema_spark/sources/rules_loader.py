@@ -40,22 +40,6 @@ def rules_to_df(spark: SparkSession, ruleset: RuleSet) -> DataFrame:
     return local_frame(spark, rows, RULES_DF_SCHEMA)
 
 
-def ruleset_from_df(df: DataFrame) -> RuleSet:
-    rules = [
-        Rule(
-            rule_id=row.rule_id,
-            kind=row.rule_kind,
-            column=row.column or "",
-            params=json.loads(row.params or "{}"),
-            gate=row.gate,
-            scope=row.scope or "row",
-            severity=row.severity or "error",
-        )
-        for row in df.collect()  # rule tables are catalog-sized: driver-side by design
-    ]
-    return RuleSet(rules)
-
-
 def rules_json_to_df(spark: SparkSession, path: str | Path) -> DataFrame:
     """LENIENT load of a rules JSON document into the rules-DF shape —
     no ``Rule`` objects are constructed, so a malformed document (unknown

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from xmlschema_spark.functions.containers import encode_gif
@@ -111,11 +110,3 @@ def generate_video_pdf(n: int, seed: int = 42, n_parts: int = 8, **fracs) -> pd.
     bounds = _family_bounds(n, _collect_fracs(**fracs))
     rows = [_make_row(i, seed, _family_of(i, bounds), n_parts) for i in range(n)]
     return pd.DataFrame(rows, columns=_COLUMNS)
-
-
-def generate_video_df(
-    spark: SparkSession, n: int, seed: int = 42, n_parts: int = 8, **fracs
-) -> DataFrame:
-    pdf = generate_video_pdf(n, seed=seed, n_parts=n_parts, **fracs)
-    df = spark.createDataFrame(pdf, schema=VIDEO_SCHEMA)
-    return df.repartitionByRange(max(8, n_parts), "part", "video_id")
