@@ -16,6 +16,7 @@ from typing import Callable
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from xmlschema_spark.operators import dedup, similarity
 
@@ -301,3 +302,22 @@ def test_cap_counts_pairable_rows(spark, gen):
     out = gen.run(_frame(spark, gen, with_null).repartition(3), CAP)
     assert gen.pairs_of(out) == all_pairs
     assert _same(out, gen.brute(with_null))
+
+
+def test_blocks_at_the_default_cap_pair_and_a_hot_block_drops(spark):
+    """A few thousand rows at embedding_near_duplicates' default cap (2000):
+    a bucket of exactly 2000 pairable rows (plus a NULL-id copy) yields all
+    2000·1999/2 pairs, and a bucket of 2001 rows yields none."""
+    dim, cap = 8, 2000
+    v = lambda k: F.array(*[F.lit(1.0 if j == k else 0.0) for j in range(dim)])  # noqa: E731
+    rows = spark.range(2 * cap + 1).select(
+        "id", F.when(F.col("id") < cap, v(0)).otherwise(v(1)).alias("v")
+    ).unionByName(spark.range(1).select(F.lit(None).cast("bigint").alias("id"), v(0).alias("v")))
+    out = similarity.embedding_near_duplicates(rows.repartition(5), "id", "v").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("id_a").alias("lo"),
+        F.max("id_b").alias("hi"),
+        F.min("cosine").alias("cos"),
+    ).first()
+    assert (out.n, out.lo, out.hi) == (cap * (cap - 1) // 2, 0, cap - 1)
+    assert math.isclose(out.cos, 1.0, abs_tol=1e-12)
