@@ -151,8 +151,9 @@ def _block_pairs(rows: DataFrame, block_cols: list[str], cap: int | None) -> Dat
     one shuffle feeds both sides, so the block-key computation (minhash
     lanes, Arrow-batched signatures) runs once. No block is ever
     gathered into one value — the window and a sort-merge join hold one
-    block's rows at a time in Spark's spillable row buffers, and the
-    pairs stream out of the join — so a hot block (a stopword's posting
+    block's rows at a time in Spark's spillable row buffers (a broadcast
+    join is picked only for inputs under the broadcast threshold), and
+    the pairs stream out of the join — so a hot block (a stopword's posting
     list, a million empty docs sharing one band hash) costs a spill, not
     a task's heap. Two alternatives measured worse: a count plus
     broadcast anti-join re-runs the block-key computation for the
